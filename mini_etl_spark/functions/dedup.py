@@ -504,7 +504,7 @@ def _prefix_exact_pairs(
     # a pair-level groupBy shuffles the whole match stream once (the
     # accumulated PPJoin filter c + min(|A|−pa_max, |B|−pb_max) was
     # implemented and A/B-measured in r13: 20× replica fixture wall
-    # 171 s → 254 s — rejected; see OPTIMIZATION_r13.md). Survivors of
+    # 171 s → 254 s — rejected; recorded in CHANGES.md). Survivors of
     # the threshold filter (≈ true pairs) are deduplicated at the end.
     cand = a.join(
         b,

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mini_etl_spark.functions.splits import hash_bucket
-from mini_etl_spark.sinks.writers import Sink, _spark_mode
+from mini_etl_spark.sinks.writers import Sink, _spark_mode, _write_stream
 
 logger = logging.getLogger(__name__)
 
@@ -173,8 +173,6 @@ def to_training_shards(
                     shard_col=shard_col, compact_every=compact_every,
                     max_segments=max_segments, options=dict(options),
                 )
-            from mini_etl_spark.sinks.writers import _write_stream
-
             sharded = df.withColumn(
                 shard_col, hash_bucket(key_col, seed=seed, num_buckets=num_shards)
             )

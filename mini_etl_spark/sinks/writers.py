@@ -74,20 +74,19 @@ def _write_stream(
     row counts for pipeline stats)."""
     import os
 
+    from mini_etl_spark.streaming.publish import _start_query
+
     writer = (
         df.writeStream.format(fmt)
         .option("path", path)
         .option("checkpointLocation", checkpoint or os.path.join(path, "_checkpoint"))
         .outputMode("append")
-        .trigger(availableNow=True)
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     for k, v in options.items():
         writer = writer.option(k, v)
-    query = writer.start()
-    query.awaitTermination()
-    return query
+    return _start_query(writer)
 
 
 def to_csv(

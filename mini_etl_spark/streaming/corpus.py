@@ -42,104 +42,29 @@ Two different incrementality shapes, matched to the operator's math:
 
 from __future__ import annotations
 
-import json
 import logging
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mini_etl_spark.streaming.events import (
+from mini_etl_spark.streaming.publish import (
+    _checkpoint_query_id,
+    _children,
+    _compact_segments,
+    _foreach_batch,
+    _incarnation_guard,
+    _numbered,
+    _pointer_segments,
     _publish_snapshot,
-    _snapshot_incarnation_guard,
+    _read_pointer,
+    _read_state,
+    _state_io,
+    _write_state,
 )
 
 logger = logging.getLogger(__name__)
 
 __all__ = ["stream_token_shards", "read_token_shards", "stream_temperature_mix"]
-
-
-def _state_io(spark: SparkSession, path: str):
-    """(fs, hadoop Path) for a small JSON state file — through the Hadoop
-    FileSystem API so URI schemes (file://, hdfs://, s3a://) work."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
-def _read_state(spark: SparkSession, path: str) -> dict:
-    fs, hpath = _state_io(spark, path)
-    if not fs.exists(hpath):
-        # a crash inside _write_state's no-overwrite fallback (between
-        # the rename-to-.bak and the rename-into-place) leaves only the
-        # backup — recover the pre-update doc rather than silently
-        # resetting to {} (which would restart the offset at 0)
-        bak = spark._jvm.org.apache.hadoop.fs.Path(path + ".bak")
-        if fs.exists(bak):
-            return _read_state(spark, path + ".bak")
-        return {}
-    stream = fs.open(hpath)
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    try:
-        return json.loads(text)
-    except ValueError as exc:
-        raise ValueError(
-            f"corrupt streaming state file {path!r} ({exc}). Do NOT just "
-            f"delete it — a missing state file silently resets the running "
-            f"offset to 0 against a live checkpoint, shifting every later "
-            f"shard boundary. Recover by restoring the file (a valid "
-            f"'{path}.tmp' sibling from an interrupted write may hold the "
-            f"intended content), or wipe the checkpoint AND the output "
-            f"path together and reprocess from scratch."
-        ) from exc
-
-
-def _write_state(spark: SparkSession, path: str, doc: dict) -> None:
-    """Write a small JSON state doc via tmp-file + rename, so a crash
-    mid-write leaves the previous doc intact (never a truncated/corrupt
-    target). Hadoop's local filesystem rename is an atomic POSIX rename;
-    on no-overwrite filesystems (HDFS semantics) the fallback first
-    renames the live doc to ``.bak`` and then renames the tmp into
-    place — a crash in between leaves the backup, which
-    :func:`_read_state` recovers (the conservative pre-update doc),
-    never a missing file that would silently reset the offset to 0."""
-    jvm = spark._jvm
-    fs, hpath = _state_io(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(doc).encode("utf-8")))
-    finally:
-        out.close()
-    bak = jvm.org.apache.hadoop.fs.Path(path + ".bak")
-    if not fs.rename(tmp, hpath):
-        fs.delete(bak, False)
-        fs.rename(hpath, bak)
-        if not fs.rename(tmp, hpath):
-            raise IOError(f"could not publish state file {path!r}")
-    # clear any backup (from this call's fallback or an older crash) so
-    # a stale doc can never be resurrected after a successful publish
-    fs.delete(bak, False)
-
-
-def _checkpoint_query_id(spark: SparkSession, checkpoint: str) -> str:
-    """The stable streaming-query id Structured Streaming persists at
-    ``<checkpoint>/metadata`` — survives restarts of the same checkpoint,
-    regenerates when the checkpoint is wiped. This is the identity that
-    scopes batch ids: batch numbering restarts at 0 for a fresh
-    checkpoint, so replay detection must never match a batch id recorded
-    under a different checkpoint incarnation. Unreadable metadata returns
-    ``""``, which :func:`_resolve_offset` treats as a WILDCARD match —
-    the degraded mode keeps replay protection (conservative direction)
-    instead of disabling it."""
-    try:
-        doc = _read_state(spark, checkpoint.rstrip("/") + "/metadata")
-        return str(doc.get("id", ""))
-    except Exception:  # metadata unreadable: degrade to wildcard matching
-        return ""
 
 
 def _resolve_offset(st: dict, batch_id: int, query_id: str = "") -> int:
@@ -176,18 +101,7 @@ def _output_pointer(out_path: str) -> str:
 
 def _committed_batches(spark: SparkSession, out_path: str) -> list[int]:
     """Batch ids with a published commit marker under ``out_path``."""
-    fs, hdir = _state_io(spark, _commit_dir(out_path))
-    if not fs.exists(hdir):
-        return []
-    ids = []
-    for status in fs.listStatus(hdir):
-        name = status.getPath().getName()
-        if name.endswith(".json"):
-            try:
-                ids.append(int(name[: -len(".json")]))
-            except ValueError:
-                continue
-    return sorted(ids)
+    return sorted(_numbered(spark, _commit_dir(out_path), "", ".json"))
 
 
 def read_token_shards(spark: SparkSession, out_path: str) -> DataFrame | None:
@@ -243,25 +157,6 @@ def read_token_shards(spark: SparkSession, out_path: str) -> DataFrame | None:
     return out
 
 
-def _output_batch_dirs(spark: SparkSession, out_path: str) -> dict[int, str]:
-    """Numeric ``batch=K`` directories under the shard OUTPUT root
-    (``_commits/``, ``compact/`` and pointer/marker files are skipped)."""
-    fs, hroot = _state_io(spark, out_path)
-    if not fs.exists(hroot):
-        return {}
-    out = {}
-    for status in fs.listStatus(hroot):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith("batch="):
-            try:
-                out[int(name[len("batch="):])] = (
-                    f"{out_path.rstrip('/')}/{name}"
-                )
-            except ValueError:
-                continue
-    return out
-
-
 def _existing_output_query_ids(
     spark: SparkSession, out_path: str, max_markers: int = 16
 ) -> set:
@@ -293,51 +188,6 @@ def _existing_output_query_ids(
     return qids
 
 
-def _seg_name(lo: int, hi: int) -> str:
-    """A sealed segment's directory name under ``compact/`` — derived
-    from the batch range it covers, never trusted from a persisted
-    absolute path, so a copied/relocated output root keeps working.
-    Deliberately NOT ``key=value``-shaped: partition discovery would
-    otherwise parse the segment dir itself as a partition component and
-    refuse multi-segment reads (CONFLICTING_DIRECTORY_STRUCTURES)."""
-    return f"seg-{lo}-{hi}"
-
-
-def _pointer_segments(st: dict) -> list[tuple[int, int, str]]:
-    """``(lo, hi, relative dir name under compact/)`` for every sealed
-    segment a ``_COMPACT.json`` pointer references, oldest first. Names
-    are RELATIVE to the output root (relocation-safe — the pointer never
-    stores an absolute path the reader would trust). A legacy pre-round-9
-    pointer (``{"upto", "dir"}`` — the monolithic-generation era) maps to
-    ONE segment covering ``0..upto`` under its historical ``upto=<n>``
-    directory name; it is carried as a sealed segment from then on and
-    eventually merged away by the normal LSM rule — no migration
-    rewrite."""
-    if not st:
-        return []
-    segs = st.get("segments")
-    if segs is None:
-        upto = int(st["upto"])
-        return [(0, upto, f"upto={upto}")]
-    return [(int(e[0]), int(e[1]), str(e[2])) for e in segs]
-
-
-def _choose_merge(segments: list[tuple[int, int, str]]) -> int:
-    """Index ``i`` of the adjacent pair ``(i, i+1)`` with the smallest
-    combined batch span — the size-tiered (LSM-style) merge pick.
-    Deterministic from the pointer alone (a replayed compaction must
-    rewrite the SAME directories); leftmost wins ties so equal-span
-    segments fold oldest-first."""
-    best, best_span = 0, None
-    for i in range(len(segments) - 1):
-        span = (segments[i][1] - segments[i][0] + 1) + (
-            segments[i + 1][1] - segments[i + 1][0] + 1
-        )
-        if best_span is None or span < best_span:
-            best, best_span = i, span
-    return best
-
-
 def _compact_output(
     spark: SparkSession,
     out_path: str,
@@ -349,10 +199,11 @@ def _compact_output(
 ) -> dict | None:
     """Seal every COMMITTED ``batch=K`` dir with ``prev_upto < K <= upto``
     into ONE new IMMUTABLE shard-partitioned segment
-    (``compact/seg=<lo>-<hi>/``), LSM-merge the two adjacent segments
-    with the smallest combined span while the segment list exceeds
-    ``max_segments``, flip the ``_COMPACT.json`` pointer atomically
-    (it carries the segment LIST), then GC with a ONE-CYCLE GRACE: only
+    (``compact/seg-<lo>-<hi>/``, written with the sink's ``options``),
+    LSM-merge the two adjacent segments with the smallest combined span
+    while the segment list exceeds ``max_segments``, flip the
+    ``_COMPACT.json`` pointer atomically (it carries the segment LIST and
+    the ``query_id``), then GC with a ONE-CYCLE GRACE: only
     directories and markers that the PREVIOUS flip already made invisible
     to new readers (batches ``<= prev_upto``, plus ``compact/`` dirs
     referenced by NEITHER the new nor the pre-flip pointer) are deleted —
@@ -369,32 +220,15 @@ def _compact_output(
     cycle; with the default ``max_segments=16`` the counter holds ~2^16
     cycles (~8 years at an hourly cadence) before a forced large merge.
 
-    Crash-safe at every point (same argument as :func:`_compact_staging`):
-    before the pointer flip the new segment and merge dirs are
-    unreferenced (a replay re-runs the identical deterministic plan and
-    overwrites them); after it, survivors of a failed GC are invisible to
-    the read rule and re-swept next cycle. Idempotent on replay — same
-    ``upto`` rewrites identical content over the same directories.
+    Crash-safe and replay-idempotent: the shared core
+    (:func:`~mini_etl_spark.streaming.publish._compact_segments`).
 
     Returns per-cycle stats ``{"upto", "segments", "folded_batches",
     "merges", "bytes_written"}`` (None for a no-op replay) — the scale
     sweep and the write-amplification regression test consume these."""
     root = out_path.rstrip("/")
-    pointer = _output_pointer(out_path)
-    st = _read_state(spark, pointer)
-    prev_upto = int(st["upto"]) if st else -1
-    if prev_upto >= upto:
-        return None  # replay of an already-applied compaction
-    new_ids = [
-        i for i in _committed_batches(spark, out_path)
-        if prev_upto < i <= upto
-    ]
-    if not new_ids:
-        return None
-    jvm = spark._jvm
-    fs, _ = _state_io(spark, root)
 
-    def _write_seg(df, name: str) -> None:
+    def _write_seg(df: DataFrame, sources: list[str], name: str) -> None:
         writer = df.repartition(F.col(shard_col)).write.mode("overwrite")
         # same writer options (compression, …) as the per-batch publishes
         # — segments hold nearly all the data, so dropping them here would
@@ -403,88 +237,18 @@ def _compact_output(
             writer = writer.option(k, v)
         writer.partitionBy(shard_col).parquet(f"{root}/compact/{name}")
 
-    # 1. seal the newly committed batches into their own tail segment
-    #    (lo tiles from prev_upto+1 so segment ranges partition 0..upto
-    #    even when some batch ids in the range were empty)
-    prev_segments = _pointer_segments(st)
-    tail = (prev_upto + 1, upto, _seg_name(prev_upto + 1, upto))
-    _write_seg(
-        spark.read.option("basePath", root)
-        .parquet(*[f"{root}/batch={i}" for i in new_ids])
-        .drop("batch"),
-        tail[2],
+    committed = _committed_batches(spark, out_path)
+    return _compact_segments(
+        spark, root, upto,
+        {i: f"{root}/batch={i}" for i in committed},
+        lambda dirs: spark.read.option("basePath", root).parquet(*dirs).drop("batch"),
+        _write_seg, max_segments, grace=True,
+        # every batch dir on disk (replay orphans of long-folded batches
+        # included) and every commit marker
+        swept=[*_numbered(spark, root, "batch=").items()]
+        + [(i, f"{_commit_dir(out_path)}/{i}.json") for i in committed],
+        query_id=query_id,
     )
-    written = [tail[2]]
-    segments = prev_segments + [tail]
-    # 2. bound the list: merge the smallest-span adjacent pair until it
-    #    fits (sealed segments other than the merged pair are untouched)
-    merges = 0
-    while len(segments) > max(1, max_segments):
-        i = _choose_merge(segments)
-        a, b = segments[i], segments[i + 1]
-        m = (a[0], b[1], _seg_name(a[0], b[1]))
-        # one read per source segment (unioned): each dir is its own
-        # partition-discovery base, so a legacy upto=N generation merges
-        # cleanly with seg-… neighbors
-        _write_seg(
-            spark.read.parquet(f"{root}/compact/{a[2]}").unionByName(
-                spark.read.parquet(f"{root}/compact/{b[2]}")
-            ),
-            m[2],
-        )
-        written.append(m[2])
-        segments[i:i + 2] = [m]
-        merges += 1
-    # 3. single atomic pointer flip — the reader-visibility point
-    _write_state(
-        spark,
-        pointer,
-        {
-            "upto": upto,
-            "segments": [[lo, hi, name] for lo, hi, name in segments],
-            "query_id": query_id,
-        },
-    )
-    bytes_written = sum(
-        fs.getContentSummary(
-            jvm.org.apache.hadoop.fs.Path(f"{root}/compact/{name}")
-        ).getLength()
-        for name in written
-    )
-    # GC (one-cycle grace): compact/ dirs referenced by NEITHER the new
-    # nor the PRE-flip pointer (in-flight readers may hold the latter);
-    # batch dirs and markers <= prev_upto (invisible since the previous
-    # flip — includes replay-orphan rewrites of long-folded batches)
-    keep = {name for _, _, name in segments}
-    keep |= {name for _, _, name in prev_segments}
-    gc = []
-    compact_root = jvm.org.apache.hadoop.fs.Path(root + "/compact")
-    if fs.exists(compact_root):
-        for status in fs.listStatus(compact_root):
-            name = status.getPath().getName()
-            if name not in keep:
-                gc.append(f"{root}/compact/{name}")
-    gc += [
-        d for k, d in _output_batch_dirs(spark, out_path).items()
-        if k <= prev_upto
-    ]
-    gc += [
-        f"{_commit_dir(out_path)}/{i}.json"
-        for i in _committed_batches(spark, out_path)
-        if i <= prev_upto
-    ]
-    for d in gc:
-        try:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-        except Exception:
-            logger.warning("output compaction GC failed for %s (ignored)", d)
-    return {
-        "upto": upto,
-        "segments": len(segments),
-        "folded_batches": len(new_ids),
-        "merges": merges,
-        "bytes_written": int(bytes_written),
-    }
 
 
 def stream_token_shards(
@@ -593,52 +357,23 @@ def stream_token_shards(
     # version (flat shard=K/ at the root, no _commits/) must not be
     # silently continued — the mixed depths break partition discovery and
     # read_token_shards would drop every pre-upgrade row
-    _session = stream_df.sparkSession
-    fs, hroot = _state_io(_session, out_path)
-    if fs.exists(hroot) and not fs.exists(
-        _state_io(_session, _commit_dir(out_path))[1]
+    session = stream_df.sparkSession
+    fs, commits = _state_io(session, _commit_dir(out_path))
+    if not fs.exists(commits) and any(
+        st.getPath().getName().startswith(f"{shard_col}=")
+        for st in _children(session, out_path)
     ):
-        for status in fs.listStatus(hroot):
-            if status.getPath().getName().startswith(f"{shard_col}="):
-                raise ValueError(
-                    f"stream_token_shards: {out_path!r} holds a "
-                    "legacy flat shard layout (pre-manifest). Point "
-                    "out_path at a fresh directory, or migrate the "
-                    "old files into a batch=<n>/ directory with a "
-                    "matching _commits/<n>.json marker."
-                )
-
+        raise ValueError(
+            f"stream_token_shards: {out_path!r} holds a legacy flat shard "
+            "layout (pre-manifest). Point out_path at a fresh directory, "
+            "or migrate the old files into a batch=<n>/ directory with a "
+            "matching _commits/<n>.json marker."
+        )
     # incarnation guard (once, at call time): the output's commit markers
-    # persist the query id of the checkpoint that produced them. Starting
-    # a DIFFERENT checkpoint incarnation (a fresh checkpoint restarts
-    # batch ids at 0) against that output would silently overwrite its
-    # early batches while read_token_shards keeps serving stale later
-    # ones. Skipped only when the current checkpoint EXISTS but its
-    # metadata is unreadable (the documented degraded-wildcard mode);
-    # a fresh checkpoint (no metadata yet) against foreign markers raises.
-    # the checkpoint may live on a DIFFERENT filesystem than out_path
-    # (hdfs:// checkpoint, s3a:// output) — resolve its own fs
-    _meta_fs, _meta_path = _state_io(
-        _session, checkpoint.rstrip("/") + "/metadata"
-    )
-    _meta_exists = _meta_fs.exists(_meta_path)
-    _ckpt_qid = _checkpoint_query_id(_session, checkpoint)
-    if not (_meta_exists and not _ckpt_qid):
-        _foreign = {
-            q for q in _existing_output_query_ids(_session, out_path)
-            if q != _ckpt_qid
-        }
-        if _foreign:
-            raise ValueError(
-                f"stream_token_shards: {out_path!r} was produced by a "
-                f"different checkpoint incarnation (query id(s) "
-                f"{sorted(_foreign)} != {_ckpt_qid or '<fresh checkpoint>'}). "
-                "Batch ids restart at 0 for a fresh checkpoint, so "
-                "continuing would overwrite early batches and corrupt "
-                "the output. Wipe out_path TOGETHER with the checkpoint "
-                "to reprocess from scratch, or resume the original "
-                "checkpoint."
-            )
+    # and compaction pointer persist the query id of the checkpoint that
+    # produced them
+    _incarnation_guard(session, "stream_token_shards", out_path, checkpoint,
+                       _existing_output_query_ids(session, out_path))
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -720,17 +455,8 @@ def stream_token_shards(
             batch_id, batch_tokens, offset + batch_tokens,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_termination:
-        query.awaitTermination()
-    return query
+    return _foreach_batch(stream_df, _apply, checkpoint, "append",
+                          available_now, await_termination)
 
 
 def _staging_batch_dirs(spark: SparkSession, seen: str) -> dict[int, str]:
@@ -740,27 +466,17 @@ def _staging_batch_dirs(spark: SparkSession, seen: str) -> dict[int, str]:
     ignored by the batch-directory read rule — every staged row from
     that era would vanish from the mixture — so their presence is an
     error, not a skip."""
-    fs, hroot = _state_io(spark, seen)
-    if not fs.exists(hroot):
-        return {}
-    out = {}
-    for status in fs.listStatus(hroot):
-        name = status.getPath().getName()
-        if status.isFile() and name.endswith(".parquet"):
-            raise ValueError(
-                f"stream_temperature_mix: staging {seen!r} holds flat "
-                "data files from the pre-batch layout; the "
-                "batch-directory read rule would silently skip them. "
-                "Migrate them into a batch=<n>/ subdirectory (any n "
-                "below the checkpoint's next batch id), or wipe the "
-                "staging together with the checkpoint."
-            )
-        if status.isDirectory() and name.startswith("batch="):
-            try:
-                out[int(name[len("batch="):])] = f"{seen.rstrip('/')}/{name}"
-            except ValueError:
-                continue
-    return out
+    if any(st.isFile() and st.getPath().getName().endswith(".parquet")
+           for st in _children(spark, seen)):
+        raise ValueError(
+            f"stream_temperature_mix: staging {seen!r} holds flat "
+            "data files from the pre-batch layout; the "
+            "batch-directory read rule would silently skip them. "
+            "Migrate them into a batch=<n>/ subdirectory (any n "
+            "below the checkpoint's next batch id), or wipe the "
+            "staging together with the checkpoint."
+        )
+    return _numbered(spark, seen, "batch=")
 
 
 def _read_staging(spark: SparkSession, seen: str) -> DataFrame | None:
@@ -785,7 +501,8 @@ def _compact_staging(
     spark: SparkSession, seen: str, upto: int, max_segments: int = 16
 ) -> None:
     """Seal all ``batch=K`` dirs with ``prev_upto < K <= upto`` into one
-    new IMMUTABLE segment (``compact/seg=<lo>-<hi>/``), LSM-merge the
+    new IMMUTABLE segment (``compact/seg-<lo>-<hi>/``, repartitioned to
+    ~128 MB files), LSM-merge the
     smallest-span adjacent pair while the segment list exceeds
     ``max_segments``, flip the ``_COMPACT.json`` pointer (carrying the
     segment list) atomically, then best-effort delete the superseded
@@ -804,70 +521,26 @@ def _compact_staging(
     identical content over the same directories and re-flips the pointer
     to the same value."""
     root = seen.rstrip("/")
-    pointer = root + "/_COMPACT.json"
-    st = _read_state(spark, pointer)
-    prev_upto = int(st["upto"]) if st else -1
-    batch_dirs = _staging_batch_dirs(spark, seen)
-    subsumed = {k: d for k, d in batch_dirs.items() if prev_upto < k <= upto}
-    # replay no-op: a re-run whose batches are already folded (pointer at
-    # or past `upto`, or the subsumed dirs already GC'd) must not rewrite
-    # the live segments over themselves — the pointer is already correct
-    if prev_upto >= upto or not subsumed:
-        return
     fs, _ = _state_io(spark, root)
-    jvm = spark._jvm
 
-    def _write_seg(sources: list[str], name: str) -> None:
+    def _write_seg(df: DataFrame, sources: list[str], name: str) -> None:
         # size the rewrite from the file listing (metadata-only), same
         # rule as maintenance.compact_parquet: ~128 MB output files
         total_bytes = sum(
-            fs.getContentSummary(jvm.org.apache.hadoop.fs.Path(d)).getLength()
+            fs.getContentSummary(_state_io(spark, d)[1]).getLength()
             for d in sources
         )
         n = max(1, -(-total_bytes // (128 * 1024 * 1024)))
-        spark.read.parquet(*sources).repartition(int(n)).write.mode(
-            "overwrite"
-        ).parquet(f"{root}/compact/{name}")
-
-    prev_segments = _pointer_segments(st)
-    tail = (prev_upto + 1, upto, _seg_name(prev_upto + 1, upto))
-    _write_seg([d for _, d in sorted(subsumed.items())], tail[2])
-    segments = prev_segments + [tail]
-    while len(segments) > max(1, max_segments):
-        i = _choose_merge(segments)
-        a, b = segments[i], segments[i + 1]
-        m = (a[0], b[1], _seg_name(a[0], b[1]))
-        _write_seg(
-            [f"{root}/compact/{a[2]}", f"{root}/compact/{b[2]}"], m[2]
+        df.repartition(int(n)).write.mode("overwrite").parquet(
+            f"{root}/compact/{name}"
         )
-        segments[i:i + 2] = [m]
-    _write_state(
-        spark,
-        pointer,
-        {
-            "upto": upto,
-            "segments": [[lo, hi, name] for lo, hi, name in segments],
-        },
+
+    batch_dirs = _staging_batch_dirs(spark, seen)
+    _compact_segments(
+        spark, root, upto, batch_dirs,
+        lambda dirs: spark.read.parquet(*dirs),
+        _write_seg, max_segments, grace=False, swept=batch_dirs.items(),
     )
-    # GC: everything the pointer has superseded — the just-subsumed batch
-    # dirs, every compact/ dir the new segment list does NOT reference
-    # (merged-away segments, plus orphans a crash between a previous
-    # pointer flip and its GC left behind), and any older batch-dir
-    # orphans (k <= upto is always excluded by the read rule, so
-    # sweeping them here is safe at any time).
-    keep = {name for _, _, name in segments}
-    gc = [d for k, d in batch_dirs.items() if k <= upto]
-    compact_root = jvm.org.apache.hadoop.fs.Path(root + "/compact")
-    if fs.exists(compact_root):
-        for status in fs.listStatus(compact_root):
-            name = status.getPath().getName()
-            if name not in keep:
-                gc.append(f"{root}/compact/{name}")
-    for d in gc:
-        try:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-        except Exception:
-            logger.warning("compaction GC failed for %s (orphan, ignored)", d)
 
 
 def stream_temperature_mix(
@@ -933,7 +606,9 @@ def stream_temperature_mix(
         raise ValueError("stream_temperature_mix: compact_every must be >= 2")
     if max_segments < 1:
         raise ValueError("stream_temperature_mix: max_segments must be >= 1")
-    _snapshot_incarnation_guard(stream_df.sparkSession, out_path, checkpoint)
+    _incarnation_guard(stream_df.sparkSession, "stream_temperature_mix",
+                       out_path, checkpoint,
+                       [_read_pointer(out_path).get("query_id")])
     seen = seen_path or (checkpoint.rstrip("/") + "/_seen")
     if seen_path is None:
         # migration guard (once, at call time): an earlier version staged
@@ -991,14 +666,5 @@ def stream_temperature_mix(
             _checkpoint_query_id(spark, checkpoint),
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_termination:
-        query.awaitTermination()
-    return query
+    return _foreach_batch(stream_df, _apply, checkpoint, "update",
+                          available_now, await_termination)

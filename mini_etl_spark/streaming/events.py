@@ -6,6 +6,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mini_etl_spark.streaming.publish import (  # noqa: F401 — re-exported
+    _batch_partition_gate,
+    _foreach_batch,
+    _guard_batch_partition_sink,
+    _merge_base,
+    _read_pointer,
+    _snapshot_merge_sink,
+    _start_query,
+    read_latest_snapshot,
+)
+
+
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream over the events parquet (one file = one
     micro-batch in tests; in production this would be Kafka/files landing).
@@ -233,158 +245,6 @@ def stream_stream_join(
     return lw.join(rw, cond, how)
 
 
-def _read_pointer(target_path: str) -> dict:
-    """The ``_LATEST`` pointer as ``{"snap": name, "prev": name|None,
-    "query_id": str, "legacy": bool}`` (empty dict when absent). Reads
-    both formats: the JSON document written since round 8, and the
-    original plain ``snap=B`` line — the latter flagged ``legacy`` so
-    callers can tell "predecessor recorded as none" (a genuine first
-    batch) from "predecessor never recorded" (pre-round-8 format), which
-    :func:`_merge_base` must treat differently on replay."""
-    import json
-    import os
-
-    pointer = os.path.join(target_path, "_LATEST")
-    if not os.path.exists(pointer):
-        return {}
-    with open(pointer) as fh:
-        text = fh.read().strip()
-    if text.startswith("{"):
-        doc = json.loads(text)
-        return {
-            "snap": doc["snap"],
-            "prev": doc.get("prev"),
-            "query_id": str(doc.get("query_id") or ""),
-            "legacy": False,
-        }
-    return {"snap": text, "prev": None, "query_id": "", "legacy": True}
-
-
-def _snapshot_incarnation_guard(
-    spark: SparkSession, target_path: str, checkpoint: str
-) -> None:
-    """Refuse to start a MERGE-shaped snapshot sink (upsert / LM / CM —
-    sinks whose target IS their state) against a target produced by a
-    DIFFERENT checkpoint incarnation: batch ids restart at 0 for a fresh
-    checkpoint, so batch 0 would collide with the old ``snap=0``, be
-    misdetected as a replay by :func:`_merge_base`, and overwrite the
-    accumulated state with the new batch's delta alone. Wipe the target
-    TOGETHER with the checkpoint to start over. Skipped when the
-    checkpoint EXISTS but its metadata is unreadable (the documented
-    degraded mode), and for pre-round-8 pointers that recorded no query
-    id (cannot positively identify a foreign incarnation)."""
-    from mini_etl_spark.streaming.corpus import (
-        _checkpoint_query_id,
-        _state_io,
-    )
-
-    fs, meta = _state_io(spark, checkpoint.rstrip("/") + "/metadata")
-    meta_exists = fs.exists(meta)
-    qid = _checkpoint_query_id(spark, checkpoint)
-    if meta_exists and not qid:
-        return  # degraded: metadata unreadable — wildcard mode
-    stored = str(_read_pointer(target_path).get("query_id") or "")
-    if stored and stored != qid:
-        raise ValueError(
-            f"snapshot target {target_path!r} was produced by a "
-            f"different checkpoint incarnation (query id {stored!r} != "
-            f"{qid or '<fresh checkpoint>'!r}). Batch ids restart at 0 "
-            "for a fresh checkpoint and would overwrite the accumulated "
-            "state with one batch's delta. Wipe the target TOGETHER "
-            "with the checkpoint to reprocess from scratch, or resume "
-            "the original checkpoint."
-        )
-
-
-def _publish_snapshot(
-    df: DataFrame, target_path: str, batch_id: int, query_id: str = ""
-) -> None:
-    """Write ``df`` as ``snap={batch_id}`` under ``target_path`` and flip
-    the ``_LATEST`` pointer atomically (os.replace) — the shared
-    publication protocol of every snapshot-maintaining foreachBatch sink
-    (upsert, LM trainer, CM sketch, temperature mix). The pointer flip
-    being LAST is the crash-safety contract: a failure before it leaves
-    the previous snapshot live and the orphan directory unreferenced.
-
-    The pointer records the PREDECESSOR snapshot too: merge-shaped sinks
-    use it (via :func:`_merge_base`) to rebuild a replayed batch from the
-    state BEFORE that batch's earlier attempt, instead of double-merging
-    into their own output — closing the crash window between the pointer
-    flip and the checkpoint commit.
-
-    Retention: superseded snapshot directories other than the new one
-    and its recorded predecessor are deleted after the flip (one-cycle
-    grace — anything a reader could have resolved through the pointer
-    since the previous flip survives until the next one), so the
-    directory count stays at ~2 at any trigger cadence. A replayed batch
-    overwrites its own directory and re-records the same predecessor, so
-    GC never touches a directory the replay still needs."""
-    import json
-    import os
-    import re
-    import shutil
-
-    prev = _read_pointer(target_path)
-    name = f"snap={batch_id}"
-    # a REPLAY's pointer may already name this batch's earlier attempt:
-    # keep pointing prev at the true predecessor, not at ourselves
-    prev_name = prev.get("snap") if prev else None
-    if prev_name == name:
-        prev_name = prev.get("prev")
-    snap = os.path.join(target_path, name)
-    df.write.mode("overwrite").parquet(snap)
-    tmp = os.path.join(target_path, "_LATEST.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(json.dumps(
-            {"snap": name, "prev": prev_name, "query_id": query_id}
-        ))
-    os.replace(tmp, os.path.join(target_path, "_LATEST"))
-    keep = {name, prev_name}
-    for entry in os.listdir(target_path):
-        if re.fullmatch(r"snap=\d+", entry) and entry not in keep:
-            shutil.rmtree(os.path.join(target_path, entry),
-                          ignore_errors=True)
-
-
-def _merge_base(spark: SparkSession, target_path: str, batch_id: int):
-    """The snapshot a merge-shaped sink should fold batch ``batch_id``
-    into: normally the pointer's current snapshot, but when the pointer
-    already names ``snap={batch_id}`` — this batch's own earlier attempt,
-    i.e. a checkpoint replay after a crash in the flip→commit window —
-    the recorded PREDECESSOR, so the batch's rows are never merged twice.
-    ``None`` when the base is empty (first batch, or a replayed first
-    batch whose JSON pointer genuinely recorded no predecessor).
-
-    A LEGACY plain-format pointer (pre-round-8: no predecessor ever
-    recorded) that names the replayed batch is the one ambiguous case:
-    treating the base as empty would REPLACE the accumulated state with
-    this batch's delta alone — silent state loss. We fall back to the
-    named snapshot instead (the documented pre-round-8 may-double-count
-    behavior: conservative in the direction that keeps history) and log
-    a loud warning so the upgrade-during-crash window is visible."""
-    import logging
-    import os
-
-    p = _read_pointer(target_path)
-    if not p:
-        return None
-    name = p["snap"]
-    if name == f"snap={batch_id}":
-        if p.get("legacy"):
-            logging.getLogger(__name__).warning(
-                "_merge_base: replayed batch %d found a LEGACY plain "
-                "_LATEST pointer naming its own earlier attempt at %s — "
-                "the predecessor was never recorded. Falling back to the "
-                "named snapshot (pre-upgrade may-double-count behavior) "
-                "rather than discarding the accumulated state.",
-                batch_id, target_path,
-            )
-        else:
-            name = p.get("prev")
-            if name is None:
-                return None
-    return spark.read.parquet(os.path.join(target_path, name))
-
 
 def stream_upsert_to_parquet(
     stream_df: DataFrame,
@@ -422,53 +282,28 @@ def stream_upsert_to_parquet(
     """
     from mini_etl_spark.operators.merge import merge_upsert
 
-    _snapshot_incarnation_guard(
-        stream_df.sparkSession, target_path, checkpoint
-    )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        from mini_etl_spark.streaming.corpus import _checkpoint_query_id
-
-        spark = batch_df.sparkSession
-        qid = _checkpoint_query_id(spark, checkpoint)
-        # replay-safe base: a replayed batch merges into the PREDECESSOR
-        # snapshot, never its own earlier attempt (idempotent either way
-        # for upsert, but keeps the snapshot chain's lineage honest)
-        current = _merge_base(spark, target_path, batch_id)
-        if order_col is not None:
-            # true last-write-wins: keep the row with the max order value
-            # per key (one hash aggregate over the batch)
-            payload = [c for c in batch_df.columns if c not in keys]
-            delta = (
-                batch_df.groupBy(*keys)
-                .agg(
-                    F.max_by(F.struct(*payload), F.col(order_col)).alias("__row")
-                )
-                .select(*keys, "__row.*")
-                .select(*batch_df.columns)
-            )
-        else:
+    def _delta(batch_df: DataFrame) -> DataFrame:
+        if order_col is None:
             # no ordering column: an ARBITRARY row per key survives when a
             # batch carries several versions of one key — fine for
             # idempotent replays, wrong for in-batch updates; pass
             # order_col for CDC streams whose batches mix versions
-            delta = batch_df.dropDuplicates(keys)
-        merged = (
-            merge_upsert(current, delta, keys) if current is not None else delta
+            return batch_df.dropDuplicates(keys)
+        # true last-write-wins: keep the row with the max order value per
+        # key (one hash aggregate over the batch)
+        payload = [c for c in batch_df.columns if c not in keys]
+        return (
+            batch_df.groupBy(*keys)
+            .agg(F.max_by(F.struct(*payload), F.col(order_col)).alias("__row"))
+            .select(*keys, "__row.*")
+            .select(*batch_df.columns)
         )
-        _publish_snapshot(merged, target_path, batch_id, qid)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _snapshot_merge_sink(
+        stream_df, "stream_upsert_to_parquet", target_path, checkpoint,
+        _delta, lambda current, delta: merge_upsert(current, delta, keys),
+        "update", available_now, await_termination,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_termination:
-        query.awaitTermination()
-    return query
 
 
 def stream_dedup_against_index(
@@ -574,79 +409,8 @@ def stream_dedup_against_index(
             kept = _gate(batch_df, True)
             kept.write.mode("append").parquet(out_path)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_termination:
-        query.awaitTermination()
-    return query
-
-
-def _guard_batch_partition_sink(
-    stream_df: DataFrame, gate: str, *sink_paths: str | None
-) -> None:
-    """Shared preflight for the exactly-once streaming gates
-    (classify/lm/drift), run on the driver BEFORE the query starts:
-
-    - the input must not carry a ``batch_id`` column — it collides with
-      the per-batch overwrite partition of the output;
-    - each sink path must not hold ROOT-LEVEL data files (the pre-r12
-      plain ``mode("append")`` layout): mixing root part files with
-      ``batch_id=<B>`` subdirectories breaks Spark partition discovery
-      ("Conflicting directory structures"), so resuming an old gate
-      output fails HERE with a migration message instead of producing a
-      dataset the reader can't open."""
-    import os
-
-    if "batch_id" in stream_df.columns:
-        raise ValueError(
-            f"{gate}: input column 'batch_id' collides with the "
-            "per-batch overwrite partition of the output — rename it "
-            "upstream."
-        )
-    for p in sink_paths:
-        if p is None or not os.path.isdir(p):
-            continue
-        flat = [
-            e
-            for e in os.listdir(p)
-            if not e.startswith(("_", "."))
-            and not e.startswith("batch_id=")
-        ]
-        if flat:
-            raise ValueError(
-                f"{gate}: output {p!r} holds root-level data files from "
-                "a pre-batch_id (plain append) run of this gate — mixing "
-                "them with batch_id=<B> partitions breaks parquet "
-                "partition discovery. Migrate the old output first, e.g. "
-                "spark.read.parquet(old).write.parquet(elsewhere), then "
-                "empty the directory (checkpoint state may be kept)."
-            )
-
-
-def _publish_batch_partition(
-    out: DataFrame, out_path: str, batch_id: int
-) -> None:
-    """Exactly-once micro-batch publish for the streaming gates: the
-    batch's rows land under their own ``batch_id=<B>`` hive partition via
-    dynamic partition overwrite, so foreachBatch's at-least-once replay
-    window (crash after the write, before the checkpoint commit)
-    REPLACES the earlier attempt instead of appending a duplicate. Read
-    with a plain ``spark.read.parquet(out_path)`` — ``batch_id`` arrives
-    as a partition column; only a reader racing a mid-write batch can see
-    a partially-written partition."""
-    (
-        out.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(out_path)
-    )
+    return _foreach_batch(stream_df, _apply, checkpoint, "append",
+                          available_now, await_termination)
 
 
 def stream_classify_gate(
@@ -682,27 +446,15 @@ def stream_classify_gate(
     front (:func:`_guard_batch_partition_sink`)."""
     from mini_etl_spark.functions.classify import nb_classify, nb_load
 
-    _guard_batch_partition_sink(stream_df, "stream_classify_gate", out_path)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _gate(batch_df: DataFrame, batch_id: int) -> tuple:
         model = nb_load(batch_df.sparkSession, model_path)
         labeled = nb_classify(model, batch_df, text_col, id_col)
-        kept = batch_df.join(
-            labeled.filter(F.col("label") == keep_label), id_col
-        )
-        _publish_batch_partition(kept, out_path, batch_id)
+        return (batch_df.join(labeled.filter(F.col("label") == keep_label), id_col),)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _batch_partition_gate(
+        stream_df, "stream_classify_gate", checkpoint, _gate,
+        available_now, await_termination, out_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_termination:
-        query.awaitTermination()
-    return query
 
 
 def stream_lm_update(
@@ -735,33 +487,11 @@ def stream_lm_update(
     doubled."""
     from mini_etl_spark.functions.lm import merge_bigram_lms, train_bigram_lm
 
-    _snapshot_incarnation_guard(
-        stream_df.sparkSession, model_path, checkpoint
+    return _snapshot_merge_sink(
+        stream_df, "stream_lm_update", model_path, checkpoint,
+        lambda batch_df: train_bigram_lm(batch_df, text_col, id_col),
+        merge_bigram_lms, "append", available_now, await_termination,
     )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        from mini_etl_spark.streaming.corpus import _checkpoint_query_id
-
-        spark = batch_df.sparkSession
-        delta = train_bigram_lm(batch_df, text_col, id_col)
-        # replay-safe base (_merge_base): a replayed batch re-merges into
-        # the PREDECESSOR snapshot, so its counts are never summed twice
-        current = _merge_base(spark, model_path, batch_id)
-        merged = merge_bigram_lms(current, delta) if current is not None else delta
-        _publish_snapshot(merged, model_path, batch_id,
-                          _checkpoint_query_id(spark, checkpoint))
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_termination:
-        query.awaitTermination()
-    return query
 
 
 def stream_lm_gate(
@@ -796,30 +526,20 @@ def stream_lm_gate(
     :func:`stream_drift_gate`."""
     from mini_etl_spark.functions.lm import bigram_logprob_score
 
-    _guard_batch_partition_sink(stream_df, "stream_lm_gate", out_path)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _gate(batch_df: DataFrame, batch_id: int) -> tuple:
         model = batch_df.sparkSession.read.parquet(model_path)
         scored = bigram_logprob_score(batch_df, model, text_col, id_col, alpha)
-        kept = batch_df.join(
+        return (batch_df.join(
             scored.filter(F.col("perplexity") <= F.lit(max_perplexity)).select(
                 id_col, "lm2_score", "perplexity"
             ),
             id_col,
-        )
-        _publish_batch_partition(kept, out_path, batch_id)
+        ),)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _batch_partition_gate(
+        stream_df, "stream_lm_gate", checkpoint, _gate,
+        available_now, await_termination, out_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_termination:
-        query.awaitTermination()
-    return query
 
 
 def stream_drift_gate(
@@ -889,11 +609,8 @@ def stream_drift_gate(
             f"stream_drift_gate: mode must be numeric|categorical, "
             f"got {mode!r}"
         )
-    _guard_batch_partition_sink(
-        stream_df, "stream_drift_gate", out_path, report_path
-    )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _gate(batch_df: DataFrame, batch_id: int) -> tuple | None:
         spark = batch_df.sparkSession
         # one materialization for the batch's three consumers (empty
         # check, drift scan, publish): without it each action re-reads
@@ -914,7 +631,7 @@ def stream_drift_gate(
                 "stream_drift_gate: batch %d is empty — skipping the "
                 "gate (nothing to write)", batch_id,
             )
-            return
+            return None
         base = spark.read.parquet(baseline_path)
         if mode == "categorical":
             report = category_drift(base, batch_df, column, top_k=top_k)
@@ -970,37 +687,13 @@ def stream_drift_gate(
                 f"max_psi {max_psi} — refusing the batch (nothing "
                 "written; fix or refresh the baseline and restart)"
             )
-        _publish_batch_partition(batch_df, out_path, batch_id)
-        if report_path is not None:
-            _publish_batch_partition(
-                spark.createDataFrame(rows, schema), report_path, batch_id
-            )
+        # the report publishes AFTER the gated batch (tuple order)
+        return batch_df, spark.createDataFrame(rows, schema)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _batch_partition_gate(
+        stream_df, "stream_drift_gate", checkpoint, _gate,
+        available_now, await_termination, out_path, report_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_termination:
-        query.awaitTermination()
-    return query
-
-
-def read_latest_snapshot(spark: SparkSession, target_path: str) -> DataFrame | None:
-    """Read the snapshot the ``_LATEST`` pointer names (see
-    :func:`stream_upsert_to_parquet`); None when no snapshot exists yet.
-    Consume the returned frame promptly: the publisher retains a
-    superseded snapshot for one further publish cycle (the recorded
-    predecessor), then GCs it."""
-    import os
-
-    p = _read_pointer(target_path)
-    if not p:
-        return None
-    return spark.read.parquet(os.path.join(target_path, p["snap"]))
 
 
 def run_stream_to_memory(
@@ -1041,18 +734,14 @@ def stream_to_files(
     scheduled-ETL mode; pass False for a continuously running query.
     Returns the StreamingQuery (already finished when both flags are on).
     """
-    writer = (
+    return _start_query(
         stream_df.writeStream.outputMode(output_mode)
         .format(fmt)
         .option("path", path)
-        .option("checkpointLocation", checkpoint)
+        .option("checkpointLocation", checkpoint),
+        available_now,
+        await_termination,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_termination:
-        query.awaitTermination()
-    return query
 
 
 def stream_cm_update(
@@ -1085,29 +774,10 @@ def stream_cm_update(
     cell counts are never summed twice."""
     from mini_etl_spark.functions.text import cm_merge, cm_sketch_table
 
-    _snapshot_incarnation_guard(
-        stream_df.sparkSession, sketch_path, checkpoint
+    return _snapshot_merge_sink(
+        stream_df, "stream_cm_update", sketch_path, checkpoint,
+        lambda batch_df: cm_sketch_table(
+            batch_df, text_col, id_col, depth, width, seed
+        ),
+        cm_merge, "append", available_now, await_termination,
     )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        from mini_etl_spark.streaming.corpus import _checkpoint_query_id
-
-        spark = batch_df.sparkSession
-        delta = cm_sketch_table(batch_df, text_col, id_col, depth, width, seed)
-        # replay-safe base: see stream_lm_update
-        current = _merge_base(spark, sketch_path, batch_id)
-        merged = cm_merge(current, delta) if current is not None else delta
-        _publish_snapshot(merged, sketch_path, batch_id,
-                          _checkpoint_query_id(spark, checkpoint))
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if available_now and await_termination:
-        query.awaitTermination()
-    return query

@@ -1,14 +1,14 @@
 #!/usr/bin/env python
-"""Round-13 per-query measurement harness (optimization guide §1).
+"""Per-query measurement harness.
 
 For each requested query key: one untimed warm pass (codegen), then N timed
 noop-sink passes (same protocol as bench.py extensions), plus the
-``explain("formatted")`` plan captured to ``plans/r12/<key>_<tag>.txt``.
+``explain("formatted")`` plan captured to ``plans/measure/<key>_<tag>.txt``.
 
 Usage:
-    python scripts/measure_r13.py --keys set_jaccard,pagerank --tag before
-    python scripts/measure_r13.py --all --tag before          # every key
-    python scripts/measure_r13.py --keys ... --runs 3
+    python scripts/measure.py --keys set_jaccard,pagerank --tag before
+    python scripts/measure.py --all --tag before          # every key
+    python scripts/measure.py --keys ... --runs 3
 
 Prints one JSON line: {"timings": {key: best_sec}, "cold": {...}, "tag": ...}.
 Plans and timings are measurement artifacts only — nothing here is on any
@@ -49,7 +49,7 @@ def main() -> None:
     import __spark_entry__ as entry
     from mini_etl_spark.session import get_spark
 
-    spark = get_spark("measure_r13")
+    spark = get_spark("measure")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry.queries()
     if args.all:
@@ -60,7 +60,7 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown keys: {unknown}")
 
-    plans_dir = os.path.join(REPO, "plans", "r13")
+    plans_dir = os.path.join(REPO, "plans", "measure")
     os.makedirs(plans_dir, exist_ok=True)
 
     # codegen/scheduler warm-up, untimed
@@ -85,7 +85,7 @@ def main() -> None:
     cold: dict[str, float] = {}
     for key in keys:
         fn = queries[key]
-        spark.sparkContext.setJobDescription(f"r13:{key}")
+        spark.sparkContext.setJobDescription(f"measure:{key}")
         df = fn(spark, SF_DIR)
         if not args.no_plans:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
