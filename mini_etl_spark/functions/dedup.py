@@ -43,6 +43,7 @@ from mini_etl_spark.functions.text import (
     shingles_from_tokens,
     tokens,
 )
+from mini_etl_spark.session import estimated_bytes
 
 
 def _shingled(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
@@ -1634,7 +1635,8 @@ def embedding_cosine_pairs(
     float32 vectors; <= 0 disables) the operator warns and routes to the
     LSH path — candidates become approximate (hyperplane-LSH recall),
     verification stays exact. The check is driver-side statistics only;
-    no job runs, so small inputs pay nothing."""
+    no job runs, so small inputs pay nothing, and an input of unknown
+    size (no statistics) stays on the GEMM path."""
     import os
     import warnings
 
@@ -1644,10 +1646,8 @@ def embedding_cosine_pairs(
         os.environ.get("MINI_ETL_EMBED_GEMM_LIMIT_BYTES", 1024**3)
     )
     if limit > 0:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        if est > limit:
+        est = estimated_bytes(df)
+        if est is not None and est > limit:
             warnings.warn(
                 f"embedding_cosine_pairs: input's estimated size ({est} "
                 f"bytes) exceeds the all-pairs block-GEMM guard ({limit} "

@@ -1046,8 +1046,9 @@ def cell_cosine_pairs(
     The ``expr`` path (r13, guide §4.2) generates CANDIDATES with one
     numpy GEMM per cell at ``threshold − 6e-5`` (the round-to-4
     admission slack plus float-summation-order slop; pairs whose exact
-    cosine is NULL can never pass the final filter and pairs whose
-    exact cosine is NaN are admitted via the GEMM's own NaN), then
+    cosine is NULL can never pass the final filter, and pairs with a
+    vector norm outside [2^-500, 2^500], where the GEMM and the JVM
+    sum can disagree on inf/NaN, are admitted unscored), then
     re-scores the few survivors with the ORIGINAL JVM expression — the
     output is bit-identical to the per-pair-expression plan by
     construction, the in-cell O(|cell|²) interpreted-dot stream is
@@ -1098,11 +1099,21 @@ def cell_cosine_pairs(
                 [np.asarray(v, dtype="float64") for v in sub["__v"]]
             )
             nrm = np.linalg.norm(M, axis=1)
+            # For two rows with norms in [2^-500, 2^500] every partial
+            # dot sum stays below 2^1000 (Cauchy-Schwarz) and the norm
+            # product above 2^-1000, so the GEMM and the JVM's
+            # sequential sum score the pair alike up to float error.
+            # Outside that range they can disagree outright: the JVM
+            # overflows a product to inf (cosine NaN, which passes the
+            # SQL >= filter since NaN sorts above every double) where a
+            # fused multiply-add stays finite, or an underflowed norm
+            # turns either score into inf/NaN. Admit every such pair
+            # (NaN norms, from null elements, included) and let the
+            # exact rescore decide; this covers every non-finite C.
+            tame = (nrm >= 2.0**-500) & (nrm <= 2.0**500)
             with np.errstate(divide="ignore", invalid="ignore"):
                 C = (M @ M.T) / np.outer(nrm, nrm)
-                # admit near-threshold AND NaN (exact NaN cosine passes
-                # the SQL >= filter — NaN sorts above every double)
-                mask = (C >= thr) | np.isnan(C)
+                mask = (C >= thr) | ~(tame[:, None] & tame[None, :])
             sid = sub["__id"].to_numpy()
             mask &= sid[:, None] < sid[None, :]
             xi, yi = np.nonzero(mask)

@@ -16,6 +16,8 @@ import math
 
 from pyspark.sql import SparkSession
 
+from mini_etl_spark.session import estimated_bytes
+
 
 def dataset_stats(spark: SparkSession, path: str) -> dict:
     """File-layout stats via the Hadoop FileSystem API (works for any
@@ -717,10 +719,12 @@ def zorder_write(
 # billions. The guard reads the optimizer's size ESTIMATE for the input
 # plan (driver-side statistics only — no job, no scan, so it costs the
 # timed query paths nothing) and falls back to `percentile_approx` with a
-# loud warning above the limit. The estimate is file-size-derived for
-# scans and therefore conservative after selective filters: the fallback
-# can only fire EARLY, never late. Declared oracle queries run orders of
-# magnitude below the default, so their exact results are untouched.
+# loud warning above the limit. An unknown size (a leaf without
+# statistics) is no evidence of a large input: the exact path stays. The
+# estimate is file-size-derived for scans and therefore conservative after
+# selective filters: the fallback can only fire EARLY, never late. Declared
+# oracle queries run orders of magnitude below the default, so their exact
+# results are untouched.
 _EXACT_PERCENTILE_LIMIT_BYTES = 8 * 1024**3
 
 
@@ -742,10 +746,8 @@ def _exact_percentile_guarded(df, exact: bool, op_name: str) -> bool:
     )
     if limit <= 0:
         return True
-    est = int(
-        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    if est > limit:
+    est = estimated_bytes(df)
+    if est is not None and est > limit:
         warnings.warn(
             f"{op_name}: exact percentile requested but the input's "
             f"estimated size ({est} bytes) exceeds the single-task "

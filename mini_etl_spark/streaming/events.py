@@ -731,7 +731,9 @@ def stream_to_files(
     restarted query resumes without duplicating or dropping batches
     (restart-with-same-checkpoint is tested). ``available_now=True`` runs
     as an incremental batch over all pending input and terminates — the
-    scheduled-ETL mode; pass False for a continuously running query.
+    scheduled-ETL mode; pass False for a continuously running query,
+    which starts a micro-batch every 500 ms (back to back when a batch
+    takes longer) so a steady stream commits in a few large batches.
     Returns the StreamingQuery (already finished when both flags are on).
     """
     return _start_query(

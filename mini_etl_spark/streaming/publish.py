@@ -41,14 +41,25 @@ logger = logging.getLogger(__name__)
 # ---------------------------------------------------------------------------
 
 
+# A continuous query starts a micro-batch at most this often. Each batch
+# pays a fixed planning and checkpoint-commit cost, so batching whatever
+# arrived in the interval beats committing back to back.
+_CONTINUOUS_TRIGGER = "500 milliseconds"
+
+
 def _start_query(writer, available_now: bool = True,
                  await_termination: bool = True):
     """Start a built ``DataStreamWriter``. ``available_now`` runs it as an
     incremental batch over all pending input (the scheduled-ETL mode) and,
     with ``await_termination``, returns it finished; otherwise the query
-    keeps running on the default trigger and is returned active."""
+    keeps running, paced at one micro-batch per ``_CONTINUOUS_TRIGGER``,
+    and is returned active. A batch that runs longer than the interval is
+    followed at once by the next, so an overloaded query runs back to
+    back as it would unpaced."""
     if available_now:
         writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=_CONTINUOUS_TRIGGER)
     query = writer.start()
     if available_now and await_termination:
         query.awaitTermination()

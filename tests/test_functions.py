@@ -372,6 +372,10 @@ def test_simhash_pairs_zero_hamming_matches_dedup(spark):
 
 
 def test_embedding_cosine_pairs_golden(spark):
+    import warnings
+
+    from mini_etl_spark import plans
+
     df = spark.createDataFrame(
         [
             (1, [1.0, 0.0, 0.0]),
@@ -380,7 +384,11 @@ def test_embedding_cosine_pairs_golden(spark):
         ],
         "vec_id bigint, embedding array<float>",
     )
-    pairs = dd.embedding_cosine_pairs(df, threshold=0.95).collect()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # no size-guard reroute to LSH
+        out = dd.embedding_cosine_pairs(df, threshold=0.95)
+    assert "MapInArrow" in plans.physical_plan(out)  # the block-GEMM path
+    pairs = out.collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
     assert pairs[0].cosine > 0.99
 

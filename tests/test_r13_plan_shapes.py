@@ -19,7 +19,10 @@ work) plus bit-level equivalence tests for the rewritten fast paths:
 - the exact-percentile scale guard falls back (loudly) to
   ``percentile_approx`` above the size limit and stays exact below it;
 - the ``embedding_cosine_pairs`` block-GEMM guard routes oversized
-  inputs to the LSH path with a warning.
+  inputs to the LSH path with a warning;
+- both guards act only on a credible size estimate: a frame without
+  statistics (optimizer sentinel ``spark.sql.defaultSizeInBytes``) keeps
+  the exact / GEMM path.
 """
 
 from __future__ import annotations
@@ -211,33 +214,14 @@ def test_ivf_assign_arrow_ships_only_the_vector_column(spark):
     assert "MapInArrow" not in plan, plan
 
 
-def test_cell_cosine_pairs_expr_rescore_is_bit_identical(spark):
-    """GEMM prefilter + exact rescore == the direct per-pair expression
-    join, bit for bit (ids AND cosines)."""
+def _cell_pairs_per_pair_expr(df, cents, threshold):
+    """The pre-r13 expr plan of ``cell_cosine_pairs``, inlined: in-cell
+    self-join + per-pair zip_with dot, the form every SQL oracle
+    replays."""
     from pyspark.sql import functions as F
 
     from mini_etl_spark.functions import similarity as sim
 
-    rng = np.random.default_rng(5)
-    # planted near-dup structure so pairs actually pass the threshold
-    base_vecs = rng.standard_normal((12, 8))
-    rows = []
-    vid = 0
-    for b in base_vecs:
-        for _ in range(6):
-            rows.append(
-                (vid, [float(x) for x in (b + 0.01 * rng.standard_normal(8))])
-            )
-            vid += 1
-    df = _vec_frame(spark, rows)
-    cents = sim.random_unit_centroids(dim=8, k=4, seed=7)
-
-    got = sim.cell_cosine_pairs(
-        df, cents, threshold=0.5, method="expr"
-    ).collect()
-
-    # the pre-r13 expr plan, inlined: in-cell self-join + per-pair
-    # zip_with dot, the form every SQL oracle replays
     assigned = sim.ivf_assign(df, cents, "embedding", method="expr")
     norm = F.sqrt(
         F.aggregate(
@@ -261,14 +245,14 @@ def test_cell_cosine_pairs_expr_rescore_is_bit_identical(spark):
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    want = (
+    return (
         a.join(
             b,
             (F.col("a.__cell") == F.col("b.__cell"))
             & (F.col("a.__id") < F.col("b.__id")),
         )
         .withColumn("cosine", F.round(dot / (F.col("a.__n") * F.col("b.__n")), 4))
-        .filter(F.col("cosine") >= 0.5)
+        .filter(F.col("cosine") >= threshold)
         .select(
             F.col("a.__id").alias("id_a"),
             F.col("b.__id").alias("id_b"),
@@ -277,11 +261,66 @@ def test_cell_cosine_pairs_expr_rescore_is_bit_identical(spark):
         )
         .collect()
     )
+
+
+def test_cell_cosine_pairs_expr_rescore_is_bit_identical(spark):
+    """GEMM prefilter + exact rescore == the direct per-pair expression
+    join, bit for bit (ids AND cosines)."""
+    from mini_etl_spark.functions import similarity as sim
+
+    rng = np.random.default_rng(5)
+    # planted near-dup structure so pairs actually pass the threshold
+    base_vecs = rng.standard_normal((12, 8))
+    rows = []
+    vid = 0
+    for b in base_vecs:
+        for _ in range(6):
+            rows.append(
+                (vid, [float(x) for x in (b + 0.01 * rng.standard_normal(8))])
+            )
+            vid += 1
+    df = _vec_frame(spark, rows)
+    cents = sim.random_unit_centroids(dim=8, k=4, seed=7)
+
+    got = sim.cell_cosine_pairs(
+        df, cents, threshold=0.5, method="expr"
+    ).collect()
+
+    want = _cell_pairs_per_pair_expr(df, cents, 0.5)
     key = lambda r: (r["id_a"], r["id_b"])  # noqa: E731
     assert sorted(map(tuple, got), key=lambda t: t[:2]) == sorted(
         map(tuple, want), key=lambda t: t[:2]
     )
     assert len(want) > 0  # the fixture actually exercises the filter
+
+
+def test_cell_cosine_pairs_expr_admits_overflow_range_pairs(spark):
+    """Vectors whose squared norms overflow double range. Rows 0 and 1:
+    the JVM's sequential dot adds ``-1e308 + inf`` (the second product
+    overflows on its own), so their exact cosine is ``inf / inf = NaN``,
+    which passes the ``>=`` filter; a BLAS dot with fused multiply-add
+    stays finite (1.25e308) and scores the pair ``1.25e308 / inf = 0``.
+    The prefilter must still admit it; the exact rescore decides."""
+    from mini_etl_spark.functions import similarity as sim
+
+    zeros = [0.0] * 6
+    rows = [
+        (0, [1e154, 1.5e154] + zeros),
+        (1, [-1e154, 1.5e154] + zeros),
+        (2, [1e154, -1e154] + zeros),
+        (3, [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0]),
+        (4, [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.5]),
+        (5, [1e-170, 1e-170] + zeros),
+        (6, [0.0] * 8),
+    ]
+    df = _vec_frame(spark, rows)
+    cents = np.full((1, 8), 8 ** -0.5)  # one cell: every pair is scored
+    got = sim.cell_cosine_pairs(df, cents, threshold=0.5,
+                                method="expr").collect()
+    want = _cell_pairs_per_pair_expr(df, cents, 0.5)
+    assert sorted(map(repr, map(tuple, got))) == sorted(
+        map(repr, map(tuple, want)))  # repr: NaN cosines compare equal
+    assert (0, 1) in {(r["id_a"], r["id_b"]) for r in want}
 
 
 def test_span_postings_drop_df1_spans(spark):
@@ -346,14 +385,16 @@ def test_exact_percentile_guard_stays_exact_below_limit(spark, monkeypatch):
     assert counts == {0: 250, 1: 250, 2: 250, 3: 250}, counts
 
 
-def test_embedding_gemm_guard_routes_to_lsh(spark, monkeypatch):
+def test_embedding_gemm_guard_routes_to_lsh(spark, monkeypatch, tmp_path):
     from mini_etl_spark.functions import dedup as dd
 
     rng = np.random.default_rng(3)
     rows = [
         (int(i), [float(x) for x in rng.standard_normal(8)]) for i in range(50)
     ]
-    df = _vec_frame(spark, rows)
+    # a parquet scan: the guard needs a credible (file-size) estimate
+    _vec_frame(spark, rows).write.parquet(str(tmp_path / "vecs"))
+    df = spark.read.parquet(str(tmp_path / "vecs"))
     monkeypatch.setenv("MINI_ETL_EMBED_GEMM_LIMIT_BYTES", "1")
     with pytest.warns(UserWarning, match="Routing .*lsh"):
         out = dd.embedding_cosine_pairs(df, "embedding", "vec_id", 0.95)
@@ -361,3 +402,36 @@ def test_embedding_gemm_guard_routes_to_lsh(spark, monkeypatch):
     monkeypatch.setenv("MINI_ETL_EMBED_GEMM_LIMIT_BYTES", "0")
     # 0 disables the guard entirely
     dd.embedding_cosine_pairs(df, "embedding", "vec_id", 0.95).collect()
+
+
+def test_estimated_bytes_reads_the_unknown_size_sentinel_as_none(spark):
+    from mini_etl_spark.session import estimated_bytes
+
+    unknown = spark.createDataFrame([(i, 1.5 * i) for i in range(1000)],
+                                    "g long, v double")
+    assert estimated_bytes(unknown) is None
+    # a plan over an unknown leaf stays unknown (a join multiplies it)
+    assert estimated_bytes(unknown.join(unknown, "g")) is None
+    known = estimated_bytes(spark.range(1000))
+    assert known is not None and 0 < known < 1024**2
+
+
+def test_size_guards_keep_the_exact_path_on_an_unknown_estimate(spark):
+    """A 1000-row ``createDataFrame`` frame has no statistics: neither
+    guard may read the Long.MaxValue sentinel as an oversized input."""
+    import warnings
+
+    from mini_etl_spark import maintenance as mt
+    from mini_etl_spark.functions import dedup as dd
+
+    df = spark.createDataFrame([(i % 7, 1.5 * i) for i in range(1000)],
+                               "g long, v double")
+    rng = np.random.default_rng(3)
+    vecs = _vec_frame(spark, [
+        (int(i), [float(x) for x in rng.standard_normal(8)]) for i in range(50)
+    ])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert mt._exact_percentile_guarded(df, True, "robust_outliers")
+        pairs = dd.embedding_cosine_pairs(vecs, "embedding", "vec_id", 0.95)
+    assert "MapInArrow" in plans.physical_plan(pairs)

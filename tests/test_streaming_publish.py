@@ -1,6 +1,7 @@
 """The shared publication protocol of the streaming sinks
 (mini_etl_spark/streaming/publish.py): snapshot publication on URI
-targets, and the query-start flags on every checkpointed sink."""
+targets, the query-start flags and triggers on every checkpointed sink,
+and the checkpoint file manager local sessions commit through."""
 
 from __future__ import annotations
 
@@ -174,3 +175,103 @@ def test_sink_start_flags_return_an_active_query(spark, tmp_path, models,
         query.stop()
     assert not query.isActive
     assert query.exception() is None
+
+
+def _trigger(query):
+    """The JVM ``Trigger`` a started query runs on."""
+    return query._jsq.streamingQuery().trigger()
+
+
+def test_continuous_query_is_paced(spark, tmp_path):
+    """A continuous query starts a micro-batch at most every 500 ms
+    instead of back to back; an ``available_now`` query keeps the
+    AvailableNow trigger."""
+    from mini_etl_spark.streaming.events import stream_to_files
+
+    src = tmp_path / "src"
+    spark.createDataFrame(ROWS, SCHEMA).coalesce(1).write.parquet(str(src))
+    query = stream_to_files(_stream(spark, src), str(tmp_path / "out"),
+                            str(tmp_path / "cp"), available_now=False,
+                            await_termination=False)
+    try:
+        trigger = _trigger(query)
+        assert trigger.getClass().getSimpleName() == "ProcessingTimeTrigger"
+        assert trigger.intervalMs() == 500
+    finally:
+        query.stop()
+
+    query = stream_to_files(_stream(spark, src), str(tmp_path / "out2"),
+                            str(tmp_path / "cp2"))
+    assert not query.isActive
+    assert _trigger(query).getClass().getSimpleName().startswith(
+        "AvailableNowTrigger")
+
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_SQL_STREAMING = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def test_local_session_checkpoints_through_filesystem_manager(spark):
+    """``get_spark`` on a local master commits checkpoints through the
+    FileSystem-based manager (no forked ``chmod``/``readlink`` per
+    rename), and ``extra_conf`` still overrides it."""
+    from mini_etl_spark.session import get_spark
+
+    assert spark.conf.get(_MANAGER_KEY) == (
+        _SQL_STREAMING + "FileSystemBasedCheckpointFileManager")
+    other = _SQL_STREAMING + "FileContextBasedCheckpointFileManager"
+    try:
+        # the builder re-applies its runtime confs to the shared session:
+        # pass the fixture's own arguments so only the manager changes
+        session = get_spark("mini-etl-spark-tests", shuffle_partitions=8,
+                            extra_conf={_MANAGER_KEY: other})
+        assert session.conf.get(_MANAGER_KEY) == other
+    finally:
+        spark.conf.set(_MANAGER_KEY,
+                       _SQL_STREAMING + "FileSystemBasedCheckpointFileManager")
+
+
+def test_continuous_file_sink_stop_mid_stream_restart_exactly_once(
+        spark, tmp_path):
+    """A continuous ``stream_to_files`` query stopped mid-stream and
+    restarted on the same checkpoint lands every event id exactly once:
+    batches the stop interrupted are redone, committed ones are not."""
+    import time
+
+    from mini_etl_spark.streaming.events import stream_to_files
+
+    src, out, cp = tmp_path / "src", str(tmp_path / "out"), str(tmp_path / "cp")
+
+    def add_files(lo, hi):
+        for i in range(lo, hi):
+            spark.range(i * 50, (i + 1) * 50).coalesce(1).write.parquet(
+                str(src / f"f{i:02d}"))
+
+    def start():
+        stream = spark.readStream.schema("id bigint").option(
+            "maxFilesPerTrigger", 1).parquet(f"{src}/*")
+        return stream_to_files(stream, out, cp, available_now=False,
+                               await_termination=False)
+
+    add_files(0, 6)
+    query = start()
+    try:
+        deadline = time.time() + 60
+        while (time.time() < deadline and query.exception() is None
+               and sum(p["numInputRows"] for p in query.recentProgress) < 100):
+            time.sleep(0.05)
+        landed = sum(p["numInputRows"] for p in query.recentProgress)
+        assert 100 <= landed < 300, landed  # stopped with files pending
+    finally:
+        query.stop()
+    assert query.exception() is None
+
+    add_files(6, 9)
+    query = start()
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    assert query.exception() is None
+    ids = sorted(r.id for r in spark.read.parquet(out).collect())
+    assert ids == list(range(9 * 50))
