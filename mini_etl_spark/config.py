@@ -117,7 +117,8 @@ def _require_streaming_source(df, sink: str) -> None:
         raise ValueError(
             f"{sink} sink requires a streaming source (add `stream: true` "
             "to the source); for batch frames use the matching transformer "
-            "node (nb_classify / lm_score) followed by a parquet sink."
+            "node (nb_classify / lm_score / drift with max_psi) followed by "
+            "a parquet sink."
         )
 
 
@@ -765,9 +766,11 @@ class ConfigLoader:
             # epoch drift monitor: PSI of the flowing frame vs a BASELINE
             # parquet (side input, like decontaminate/index_dedup). The
             # node REPLACES the frame with the per-bin drift report —
-            # put it on a branch/multi-sink leg, or follow with
-            # max_psi to fail the run on a shifted distribution.
+            # put it on a branch/multi-sink leg, or set max_psi to fail
+            # the run on a shifted distribution (the stream gate's rule:
+            # an unpinned bin range comes from the baseline alone).
             from mini_etl_spark.maintenance import (
+                _psi_gate,
                 category_drift,
                 distribution_drift,
             )
@@ -781,8 +784,8 @@ class ConfigLoader:
                 )
             bins = int(o.get("bins", 10))
             top_k = int(o.get("top_k", 20))
-            lo = o.get("lo")
-            hi = o.get("hi")
+            lo = None if o.get("lo") is None else float(o["lo"])
+            hi = None if o.get("hi") is None else float(o["hi"])
             max_psi = o.get("max_psi")
             md = o.get("max_distinct", 100_000)
             max_distinct = None if md is None else int(md)
@@ -797,39 +800,23 @@ class ConfigLoader:
                         "drift_gate SINK instead."
                     )
                 base = df.sparkSession.read.parquet(_b)
-                if _m == "categorical":
-                    out = category_drift(
-                        base, df, _c, top_k=_k, max_distinct=_md
-                    )
-                else:
-                    out = distribution_drift(
-                        base, df, _c, bins=_n,
-                        lo=None if _lo is None else float(_lo),
-                        hi=None if _hi is None else float(_hi),
-                    )
                 if _cap is not None:
                     # the gate's sum is an action and the sink is another:
-                    # collect the ≤bins-row report once (single scan of
-                    # both epochs), gate on the driver-side sum, and
-                    # re-create the frame locally for the sink — no
-                    # persist, so nothing stays cached in a long-lived
-                    # shared session (and nothing leaks on the raise path)
-                    schema = out.schema
-                    rows = out.collect()
-                    psi = sum(r["psi_contrib"] or 0.0 for r in rows)
-                    if psi > float(_cap):
-                        raise ValueError(
-                            f"drift: PSI {psi:.4f} of column {_c!r} vs "
-                            f"baseline {_b!r} exceeds max_psi {_cap} — "
-                            "the new epoch's distribution has shifted; "
-                            "refusing to publish it"
-                        )
-                    logger.info(
-                        "drift: column %r PSI %.4f <= max_psi %s vs %r",
-                        _c, psi, _cap, _b,
+                    # the report is collected once and re-created locally
+                    # for the sink — nothing stays cached in a long-lived
+                    # shared session (nor leaks on the raise path)
+                    rows, schema = _psi_gate(
+                        base, df, _c, float(_cap), "drift", _b, mode=_m,
+                        bins=_n, lo=_lo, hi=_hi, top_k=_k, max_distinct=_md,
                     )
-                    out = df.sparkSession.createDataFrame(rows, schema)
-                return out
+                    return df.sparkSession.createDataFrame(rows, schema)
+                if _m == "categorical":
+                    return category_drift(
+                        base, df, _c, top_k=_k, max_distinct=_md
+                    )
+                return distribution_drift(
+                    base, df, _c, bins=_n, lo=_lo, hi=_hi
+                )
 
             return _drift
         if spec.type == "nb_classify":
@@ -973,13 +960,7 @@ class ConfigLoader:
             def _gate(df, _p=path, _b=baseline, _cp=checkpoint, _c=column,
                       _cap=max_psi, _m=gmode, _n=bins, _k=top_k, _lo=lo,
                       _hi=hi, _r=report):
-                if not df.isStreaming:
-                    raise ValueError(
-                        "drift_gate sink requires a streaming source "
-                        "(add `stream: true` to the source); for batch "
-                        "epochs use the `drift` transformer with "
-                        "max_psi followed by a parquet sink."
-                    )
+                _require_streaming_source(df, "drift_gate")
                 return stream_drift_gate(
                     df, _b, _p, _cp, _c, _cap, mode=_m, bins=_n,
                     lo=None if _lo is None else float(_lo),

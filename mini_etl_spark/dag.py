@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mini_etl_spark.session import get_spark
+from mini_etl_spark.statefile import _read_state, _write_state
 
 
 logger = logging.getLogger(__name__)
@@ -366,10 +367,6 @@ class PipelineDAG:
         upstream: DataFrame,
         checkpoint_dir: str | None,
     ) -> DataFrame:
-        # the state-file protocol (tmp+rename publish, .bak recovery) is
-        # shared with the streaming sinks — one crash-safety impl, not two
-        from mini_etl_spark.streaming.corpus import _read_state, _write_state
-
         target = node.metadata.get("path") or (
             f"{checkpoint_dir.rstrip('/')}/{node.name}" if checkpoint_dir else None
         )

@@ -47,6 +47,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mini_etl_spark.statefile import _read_state, _write_state
+
 #: Bits carried per word of the filter. 62 (not 64) so every mask is a
 #: positive long and ``pow(2, bit)`` is exact in double precision in both
 #: engines — see the module docstring.
@@ -359,7 +361,6 @@ def decontamination_index_write(
     scan), so the filter is sized to the real benchmark. Returns the
     resolved params."""
     from mini_etl_spark.functions.text import exploded_shingles
-    from mini_etl_spark.streaming.corpus import _write_state
 
     spark = benchmark_df.sparkSession
     (
@@ -438,7 +439,6 @@ def decontamination_index_append(
     import logging
 
     from mini_etl_spark.functions.text import exploded_shingles
-    from mini_etl_spark.streaming.corpus import _read_state, _write_state
 
     log = logging.getLogger(__name__)
     spark = benchmark_df.sparkSession
@@ -534,7 +534,6 @@ def bloom_decontaminate_indexed(
     :func:`bloom_decontaminate`: batch docs sharing no n-gram with the
     benchmark, independent of the filter sizing."""
     from mini_etl_spark.functions.text import exploded_shingles
-    from mini_etl_spark.streaming.corpus import _read_state
 
     _reject_streaming(batch_df, "bloom_decontaminate_indexed")
     spark = batch_df.sparkSession

@@ -1642,6 +1642,8 @@ def embedding_cosine_pairs(
 
     import pyarrow as pa_mod
 
+    from mini_etl_spark.functions.similarity import _cosine_admit
+
     limit = int(
         os.environ.get("MINI_ETL_EMBED_GEMM_LIMIT_BYTES", 1024**3)
     )
@@ -1709,9 +1711,10 @@ def embedding_cosine_pairs(
         """One block: (ids int64, {dim: (ids subset, float64 matrix)}).
         Vectors are grouped by length — pairs of unequal length can never
         pass the exact filter (zip_with pads with null → null cosine), so
-        only equal-length groups are compared. Null vectors / elements
-        become NaN rows, which fail every >= test, matching the exact
-        path's null propagation."""
+        only equal-length groups are compared. Null vectors are skipped
+        (their exact cosine is NULL); null or NaN elements make a NaN
+        row, which :func:`_cosine_admit` admits for the exact rescore to
+        decide (NULL cosine dropped, NaN cosine kept)."""
         ids = ids_col[i].values.to_numpy(zero_copy_only=False)
         inner = vs_col[i].values
         lens_arr = inner.value_lengths()
@@ -1756,9 +1759,7 @@ def embedding_cosine_pairs(
                     ib, B = got
                     na = np.linalg.norm(A, axis=1)
                     nb = na if same else np.linalg.norm(B, axis=1)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        C = (A @ B.T) / np.outer(na, nb)
-                        mask = C >= thr
+                    mask = _cosine_admit(A, B, na, nb, thr)
                     if same:
                         # diagonal block: the matrix holds both orientations
                         mask &= ia[:, None] < ib[None, :]

@@ -49,13 +49,13 @@ so scoring needs no shingle sets at all.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mini_etl_spark.functions.dedup import _element_hash64, _shingled
+from mini_etl_spark.statefile import _read_state, _session, _write_state
 
 __all__ = [
     "minhash_index_write",
@@ -239,7 +239,13 @@ def minhash_index_write(
     bands: int = 16,
     hash_fn: str = "xxhash64",
 ) -> None:
-    """Build the index from the current corpus (overwrites ``path``)."""
+    """Build the index from the current corpus (overwrites ``path``).
+
+    The ``_minhash_meta.json`` parameters doc is published LAST, by
+    tmp+rename through the Hadoop FileSystem API (the same
+    :mod:`~mini_etl_spark.statefile` protocol as the Bloom, IVF and
+    jaccard markers), so it lands next to the index data on any URI
+    scheme and a crash mid-write never leaves it torn."""
     if num_hashes % bands != 0:
         raise ValueError("minhash_index_write: bands must divide num_hashes")
     meta = {
@@ -251,15 +257,15 @@ def minhash_index_write(
         "hash_fn": hash_fn,
     }
     sig = minhash_signatures(df, text_col, id_col, n, num_hashes, hash_fn)
-    os.makedirs(path, exist_ok=True)
     _write_parts(sig, path, id_col, meta, mode="overwrite")
-    with open(os.path.join(path, _META), "w") as f:
-        json.dump(meta, f)
+    _write_state(df.sparkSession, os.path.join(path, _META), meta)
 
 
-def _read_meta(path: str) -> dict:
-    with open(os.path.join(path, _META)) as f:
-        return json.load(f)
+def _read_meta(path: str, spark: SparkSession | None = None) -> dict:
+    meta = _read_state(_session(spark, "minhash index"), os.path.join(path, _META))
+    if not meta:
+        raise FileNotFoundError(f"minhash index at {path!r} has no {_META}")
+    return meta
 
 
 def minhash_index_append(df: DataFrame, path: str) -> int:
@@ -281,7 +287,7 @@ def minhash_index_append(df: DataFrame, path: str) -> int:
     batch id already stored) scans only the stored signature ids — the
     pre-r12 screen — and the batch is shingled once; the bands table is
     read only on the heal path (see :func:`_append_parts`)."""
-    meta = _read_meta(path)
+    meta = _read_meta(path, df.sparkSession)
     id_col = meta["id_col"]
     sig = minhash_signatures(
         df, meta["text_col"], id_col, meta["n"], meta["num_hashes"],
@@ -473,7 +479,7 @@ def _probe(
     released by the context cleaner when the frames are dropped, unlike a
     ``persist`` that would pin one cache entry per ingested batch for the
     life of the session."""
-    meta = _read_meta(path)
+    meta = _read_meta(path, spark)
     id_col, num_hashes = meta["id_col"], meta["num_hashes"]
 
     corpus_bands = spark.read.parquet(os.path.join(path, "bands"))

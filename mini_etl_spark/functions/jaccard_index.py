@@ -75,6 +75,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mini_etl_spark.functions.dedup import _shingled
+from mini_etl_spark.statefile import _read_state, _write_state
 
 __all__ = [
     "jaccard_index_write",
@@ -87,8 +88,6 @@ _MARKER = "_JACCARD.json"
 
 
 def _read_params(spark: SparkSession, path: str) -> dict:
-    from mini_etl_spark.streaming.corpus import _read_state
-
     params = _read_state(spark, os.path.join(path, _MARKER))
     if not params:
         raise ValueError(
@@ -161,8 +160,6 @@ def jaccard_index_write(
     frozen frequency table + ranked postings + params marker (published
     last). Returns the number of indexed documents (docs with ≥ 1
     shingle)."""
-    from mini_etl_spark.streaming.corpus import _write_state
-
     spark = df.sparkSession
     elems = _batch_elems(df, text_col, id_col, n).persist()
     try:

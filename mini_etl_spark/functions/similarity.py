@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from mini_etl_spark.statefile import _read_state, _write_state
+
 
 def _dlit(v: float) -> str:
     """Exact SQL double literal: Python repr round-trips IEEE-754 and
@@ -495,8 +497,6 @@ def build_ivf_index(
     :func:`ivf_topk_indexed` never have to be told the column names
     ("parameters are never arguments", the same discipline as the Bloom
     index marker in bloom.py decontamination_index_write)."""
-    from mini_etl_spark.streaming.corpus import _write_state
-
     spark = df.sparkSession
     if centroids is None:
         centroids = ivf_centroids_kmeans(
@@ -542,8 +542,6 @@ def _ivf_resolve_cols(
     other non-``ivf_cell`` column remains, it is the id; otherwise the
     legacy defaults apply."""
     from pyspark.sql.types import ArrayType
-
-    from mini_etl_spark.streaming.corpus import _read_state
 
     params = _read_state(spark, f"{path}/_IVF.json")
     if params and "vec_col" in params:
@@ -616,8 +614,6 @@ def ivf_index_append(
     that disagrees with the record raises (see
     :func:`_ivf_resolve_cols`)."""
     import logging
-
-    from mini_etl_spark.streaming.corpus import _write_state
 
     log = logging.getLogger(__name__)
     spark = df.sparkSession
@@ -1015,6 +1011,29 @@ def random_unit_centroids(dim: int, k: int, seed: int = 7) -> np.ndarray:
     return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
+def _cosine_admit(A, B, na, nb, thr: float):
+    """Candidate mask of the GEMM cosine prefilters (``cell_cosine_pairs``,
+    ``dedup.embedding_cosine_pairs``) over rows ``A`` x ``B`` with row
+    norms ``na``/``nb``: ``cosine >= thr``, plus every pair with a row
+    norm outside [2^-500, 2^500].
+
+    For two rows with norms in that range every partial dot sum stays
+    below 2^1000 (Cauchy-Schwarz) and the norm product above 2^-1000, so
+    the GEMM and the JVM's sequential sum score the pair alike up to
+    float error. Outside it they can disagree outright: the JVM
+    overflows a product to inf (cosine NaN, which passes the SQL ``>=``
+    filter since NaN sorts above every double) where a fused
+    multiply-add stays finite, or an underflowed norm turns either score
+    into inf/NaN. Such pairs (NaN norms, from NaN or null elements,
+    included) are admitted and the exact rescore decides; this covers
+    every non-finite score."""
+    tame_a = (na >= 2.0**-500) & (na <= 2.0**500)
+    tame_b = (nb >= 2.0**-500) & (nb <= 2.0**500)
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        C = (A @ B.T) / np.outer(na, nb)
+        return (C >= thr) | ~(tame_a[:, None] & tame_b[None, :])
+
+
 def cell_cosine_pairs(
     df: DataFrame,
     centroids: np.ndarray,
@@ -1099,21 +1118,7 @@ def cell_cosine_pairs(
                 [np.asarray(v, dtype="float64") for v in sub["__v"]]
             )
             nrm = np.linalg.norm(M, axis=1)
-            # For two rows with norms in [2^-500, 2^500] every partial
-            # dot sum stays below 2^1000 (Cauchy-Schwarz) and the norm
-            # product above 2^-1000, so the GEMM and the JVM's
-            # sequential sum score the pair alike up to float error.
-            # Outside that range they can disagree outright: the JVM
-            # overflows a product to inf (cosine NaN, which passes the
-            # SQL >= filter since NaN sorts above every double) where a
-            # fused multiply-add stays finite, or an underflowed norm
-            # turns either score into inf/NaN. Admit every such pair
-            # (NaN norms, from null elements, included) and let the
-            # exact rescore decide; this covers every non-finite C.
-            tame = (nrm >= 2.0**-500) & (nrm <= 2.0**500)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                C = (M @ M.T) / np.outer(nrm, nrm)
-                mask = (C >= thr) | ~(tame[:, None] & tame[None, :])
+            mask = _cosine_admit(M, M, nrm, nrm, thr)
             sid = sub["__id"].to_numpy()
             mask &= sid[:, None] < sid[None, :]
             xi, yi = np.nonzero(mask)

@@ -8,10 +8,14 @@ filter the next run's scan to ``cursor > watermark`` — a predicate
 Catalyst pushes into the parquet scan, so old row groups/partitions are
 skipped at the metadata level, not read-and-dropped.
 
-State is one tiny JSON file (same contract as a scheduler checkpoint —
-driver-side, atomic rename). The cursor of the *current* batch is
-computed with ``observe`` on the same job that processes it: no second
-scan, no driver-side max over collected data.
+State is one tiny JSON file, written as a Hadoop-FS state file
+(:mod:`mini_etl_spark.statefile`: tmp+rename publish, ``.bak``
+recovery). A URI (``file://``, ``hdfs://``, ``s3a://``) lands on its own
+file system, and a plain path resolves against ``fs.defaultFS``, as
+every data path does, so the next run finds the watermark from any
+working directory or host. The cursor of the *current* batch is computed
+with ``observe`` on the same job that processes it: no second scan, no
+driver-side max over collected data.
 
 No reference parity: the reference reprocesses full inputs every run —
 this is part of the scale extension.
@@ -19,37 +23,29 @@ this is part of the scale extension.
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
+import datetime
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from mini_etl_spark.statefile import _read_state, _session, _write_state
+
 
 def load_watermark(state_path: str) -> Any | None:
     """Read the persisted cursor (None before the first run)."""
-    if not os.path.exists(state_path):
-        return None
-    with open(state_path) as fh:
-        return json.load(fh)["watermark"]
+    spark = _session(None, "load_watermark")
+    return _read_state(spark, state_path).get("watermark")
 
 
 def save_watermark(state_path: str, value: Any) -> None:
-    """Atomically persist the cursor (write + rename, so a crashed run
-    never leaves a torn state file). Timestamps are stored as ISO strings;
+    """Atomically persist the cursor (tmp+rename, so a crashed run never
+    leaves a torn state file). Timestamps are stored as ISO strings;
     Spark coerces them back in the ``cursor > watermark`` comparison."""
-    import datetime
-
     if isinstance(value, (datetime.datetime, datetime.date)):
         value = value.isoformat(sep=" ")
-    d = os.path.dirname(os.path.abspath(state_path)) or "."
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"watermark": value}, fh)
-    os.replace(tmp, state_path)
+    _write_state(_session(None, "save_watermark"), state_path,
+                 {"watermark": value})
 
 
 class IncrementalBatch:

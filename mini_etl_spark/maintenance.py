@@ -12,20 +12,22 @@ layout to maintain — this is part of the scale extension.
 
 from __future__ import annotations
 
+import logging
 import math
 
 from pyspark.sql import SparkSession
 
 from mini_etl_spark.session import estimated_bytes
+from mini_etl_spark.statefile import _state_io
+
+logger = logging.getLogger(__name__)
 
 
 def dataset_stats(spark: SparkSession, path: str) -> dict:
     """File-layout stats via the Hadoop FileSystem API (works for any
     scheme Spark supports — local, HDFS, s3a…): total bytes, data-file
     count, mean file size. Metadata-only; reads no data."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _state_io(spark, path)
     files = []
     it = fs.listFiles(jpath, True)
     while it.hasNext():
@@ -501,6 +503,68 @@ def category_drift(
     )
 
 
+def _psi_gate(base, batch, column: str, max_psi: float, who: str,
+              baseline: str, mode: str = "numeric", bins: int = 10,
+              lo: float | None = None, hi: float | None = None,
+              top_k: int = 20, max_distinct: int | None = 100_000):
+    """Gate ``batch`` on its PSI against the ``base`` epoch (read from
+    ``baseline``): the collected drift report's ``(rows, schema)`` when
+    PSI <= ``max_psi``, else a ValueError prefixed ``who``. The one gate
+    behind the ``drift`` config node and ``stream_drift_gate``.
+
+    A numeric bin range not pinned by ``lo``/``hi`` is a function of the
+    BASELINE alone, never of the batch: batch outliers clamp into the
+    edge bins. A range over both epochs would let one far outlier row
+    stretch it until a shifted batch falls into the baseline's bins and
+    passes. A zero-width derived range (a constant baseline) is refused:
+    one bin cannot show a shift. The report has at most ``bins`` /
+    ``top_k + 1`` rows and is collected once; nothing is cached."""
+    from pyspark.sql import functions as F
+
+    if mode == "categorical":
+        report = category_drift(base, batch, column, top_k=top_k,
+                                max_distinct=max_distinct)
+    else:
+        if lo is None or hi is None:
+            span = (
+                base.select(F.col(column).cast("double").alias("__v"))
+                .filter(F.col("__v").isNotNull())
+                .agg(F.min("__v").alias("mn"), F.max("__v").alias("mx"))
+                .first()
+            )
+            if span["mn"] is None:
+                raise ValueError(
+                    f"{who}: baseline {baseline!r} has no non-null values "
+                    f"in column {column!r} — nothing to derive the bin "
+                    "range from; pin lo/hi or fix the baseline."
+                )
+            lo = span["mn"] if lo is None else lo
+            hi = span["mx"] if hi is None else hi
+            if lo >= hi:
+                raise ValueError(
+                    f"{who}: derived bin range for column {column!r} is "
+                    f"zero-width [{lo}, {hi}] — the baseline {baseline!r} "
+                    "is constant in that column, so a PSI histogram cannot "
+                    "see a shift. Pin lo/hi to the design range (any value "
+                    "outside it will then clamp into an edge bin and "
+                    "register as drift)."
+                )
+        report = distribution_drift(base, batch, column, bins=bins, lo=lo,
+                                    hi=hi)
+    rows = report.collect()
+    psi = sum(r["psi_contrib"] or 0.0 for r in rows)
+    if psi > max_psi:
+        raise ValueError(
+            f"{who}: PSI {psi:.4f} of column {column!r} vs baseline "
+            f"{baseline!r} exceeds max_psi {max_psi} — the distribution "
+            "has shifted; refusing to publish it (nothing written; fix or "
+            "refresh the baseline and rerun)"
+        )
+    logger.info("%s: column %r PSI %.4f <= max_psi %s vs %r",
+                who, column, psi, max_psi, baseline)
+    return rows, report.schema
+
+
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -556,11 +620,9 @@ def compact_dataset_inplace(
     OPTIMIZE without a transactional table format carries.
 
     Returns before/after :func:`dataset_stats`."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = jvm.org.apache.hadoop.fs.Path(path + ".compact-tmp")
-    old = jvm.org.apache.hadoop.fs.Path(path + ".old")
+    fs, hpath = _state_io(spark, path)
+    tmp = _state_io(spark, path + ".compact-tmp")[1]
+    old = _state_io(spark, path + ".old")[1]
     # recovery: a crash between the two swap renames left only .old
     if not fs.exists(hpath) and fs.exists(old):
         if not fs.rename(old, hpath):
@@ -612,10 +674,7 @@ def compact_minhash_index(
     Returns per-component before/after stats."""
     import os
 
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
+    fs, _ = _state_io(spark, path)
     out = {}
     # "postings" is the jaccard index's one growing component (its
     # "freq" table is frozen at build time and never appended to)
@@ -626,9 +685,7 @@ def compact_minhash_index(
         ("postings", None),
     ):
         cdir = os.path.join(path, comp)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(cdir)) and not fs.exists(
-            jvm.org.apache.hadoop.fs.Path(cdir + ".old")
-        ):
+        if not any(fs.exists(_state_io(spark, p)[1]) for p in (cdir, cdir + ".old")):
             continue
         out[comp] = compact_dataset_inplace(
             spark, cdir, target_file_mb, partition_by=part_by

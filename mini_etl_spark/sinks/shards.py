@@ -14,9 +14,9 @@ that contract on top of the engine's deterministic md5 bucketing:
   hive-style (``shard=K/part-*.json``) and readable back with a plain
   ``spark.read.format(fmt).load(path)`` (the shard id comes back as a
   partition column, and shard-scoped reads prune to one directory);
-- a driver-side ``_manifest.json`` records per-shard row counts and the
-  assignment parameters (the file a training launcher reads to hand
-  shards to workers).
+- a ``_manifest.json`` next to the shards records per-shard row counts
+  and the assignment parameters (the file a training launcher reads to
+  hand shards to workers).
 
 No reference parity: the reference has no sharded-export surface — this is
 the training-data-pipeline extension (BASELINE.json north star).
@@ -30,7 +30,6 @@ shards, which is exactly what the single hash shuffle handles.
 
 from __future__ import annotations
 
-import json
 import logging
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +37,7 @@ from pyspark.sql import functions as F
 
 from mini_etl_spark.functions.splits import hash_bucket
 from mini_etl_spark.sinks.writers import Sink, _spark_mode, _write_stream
+from mini_etl_spark.statefile import _read_state, _session, _write_state
 
 logger = logging.getLogger(__name__)
 
@@ -48,16 +48,7 @@ _FORMATS = {"jsonl": "json", "parquet": "parquet", "csv": "csv"}
 # manifest would describe only the last batch; "ignore" would skip the
 # data write yet still rewrite the manifest
 _ALLOWED_MODES = {"w", "overwrite", "replace", "error", "fail"}
-
-
-def _manifest_path(spark: SparkSession, path: str):
-    """(fs, hadoop Path) for <path>/_manifest.json — resolved through the
-    Hadoop FileSystem API so URI paths (file://, hdfs://, s3a://) land
-    next to the shards instead of being mangled into a local path."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path, "_manifest.json")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
+_MANIFEST = "_manifest.json"
 
 
 def to_training_shards(
@@ -96,7 +87,10 @@ def to_training_shards(
 
     The manifest is counted from the WRITTEN shards (one scan of the
     just-materialized output — never a recompute of the input plan), so
-    it always agrees with the files on disk; ``manifest=False`` skips it.
+    it always agrees with the files on disk, and is published atomically
+    after the data (a :mod:`~mini_etl_spark.statefile` tmp+rename, so a
+    crash mid-write never leaves a torn ``_manifest.json``);
+    ``manifest=False`` skips it.
 
     ``mode`` accepts only fresh-write modes (overwrite / error): append
     or ignore would break the one-file-per-shard and manifest contracts.
@@ -250,12 +244,7 @@ def to_training_shards(
             }
             if tokens_per_shard is not None:
                 doc["tokens_per_shard"] = tokens_per_shard
-            fs, hpath = _manifest_path(spark, path)
-            out = fs.create(hpath, True)
-            try:
-                out.write(bytearray(json.dumps(doc, indent=1).encode("utf-8")))
-            finally:
-                out.close()
+            _write_state(spark, f"{path.rstrip('/')}/{_MANIFEST}", doc)
             logger.info(
                 "to_training_shards: %d rows into %d shards at %s",
                 doc["total_rows"], doc["num_shards"], path,
@@ -269,15 +258,8 @@ def read_shard_manifest(path: str, spark: SparkSession | None = None) -> dict:
 
     Resolved through the Hadoop FileSystem API (URI schemes work); pass
     ``spark`` explicitly when no session is active."""
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("read_shard_manifest: no active SparkSession")
-    fs, hpath = _manifest_path(spark, path)
-    stream = fs.open(hpath)
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-        return json.loads(text)
-    finally:
-        stream.close()
+    spark = _session(spark, "read_shard_manifest")
+    doc = _read_state(spark, f"{path.rstrip('/')}/{_MANIFEST}")
+    if not doc:
+        raise FileNotFoundError(f"read_shard_manifest: no {_MANIFEST} under {path!r}")
+    return doc

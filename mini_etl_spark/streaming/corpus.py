@@ -47,19 +47,21 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mini_etl_spark.streaming.publish import (
-    _checkpoint_query_id,
+from mini_etl_spark.statefile import (
     _children,
-    _compact_segments,
-    _foreach_batch,
-    _incarnation_guard,
     _numbered,
-    _pointer_segments,
-    _publish_snapshot,
-    _read_pointer,
     _read_state,
     _state_io,
     _write_state,
+)
+from mini_etl_spark.streaming.publish import (
+    _checkpoint_query_id,
+    _compact_segments,
+    _foreach_batch,
+    _incarnation_guard,
+    _pointer_segments,
+    _publish_snapshot,
+    _read_pointer,
 )
 
 logger = logging.getLogger(__name__)

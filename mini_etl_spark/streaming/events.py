@@ -602,7 +602,7 @@ def stream_drift_gate(
     replacing the parquet between batches rolls the reference epoch
     forward without restarting the query. Pure per-batch function of
     (batch, baseline) → replay-safe gating decision AND sink."""
-    from mini_etl_spark.maintenance import category_drift, distribution_drift
+    from mini_etl_spark.maintenance import _psi_gate
 
     if mode not in ("numeric", "categorical"):
         raise ValueError(
@@ -632,61 +632,11 @@ def stream_drift_gate(
                 "gate (nothing to write)", batch_id,
             )
             return None
-        base = spark.read.parquet(baseline_path)
-        if mode == "categorical":
-            report = category_drift(base, batch_df, column, top_k=top_k)
-        else:
-            blo, bhi = lo, hi
-            if blo is None or bhi is None:
-                # stationary default: the bin range is a function of the
-                # BASELINE epoch alone (re-derived per batch only because
-                # the baseline parquet may be rolled forward between
-                # batches) — never of the batch, whose outliers must
-                # CLAMP into edge bins rather than stretch the range
-                span = (
-                    base.select(F.col(column).cast("double").alias("__v"))
-                    .filter(F.col("__v").isNotNull())
-                    .agg(F.min("__v").alias("mn"), F.max("__v").alias("mx"))
-                    .first()
-                )
-                if span["mn"] is None:
-                    raise ValueError(
-                        f"stream_drift_gate: baseline {baseline_path!r} "
-                        f"has no non-null values in column {column!r} — "
-                        "nothing to derive the bin range from; pin "
-                        "lo/hi or fix the baseline."
-                    )
-                blo = span["mn"] if blo is None else blo
-                bhi = span["mx"] if bhi is None else bhi
-                if blo >= bhi:
-                    # zero-width derived range (constant baseline, or a
-                    # pinned bound degenerate against the derived one):
-                    # distribution_drift would collapse to ONE bucket and
-                    # a fully mean-shifted batch would PASS with PSI ~ 0
-                    # — refuse to gate blind instead of false-negating
-                    raise ValueError(
-                        f"stream_drift_gate: derived bin range for "
-                        f"column {column!r} is zero-width "
-                        f"[{blo}, {bhi}] — the baseline "
-                        f"{baseline_path!r} is constant in that column, "
-                        "so a PSI histogram cannot see a shift. Pin "
-                        "lo/hi to the design range (any batch value "
-                        "outside it will then clamp into an edge bin "
-                        "and register as drift)."
-                    )
-            report = distribution_drift(
-                base, batch_df, column, bins=bins, lo=blo, hi=bhi
-            )
-        schema = report.schema
-        rows = report.collect()  # bounded: ≤ bins / top_k+1 rows
-        psi = sum(r["psi_contrib"] or 0.0 for r in rows)
-        if psi > max_psi:
-            raise ValueError(
-                f"stream_drift_gate: batch {batch_id} PSI {psi:.4f} of "
-                f"column {column!r} vs baseline {baseline_path!r} exceeds "
-                f"max_psi {max_psi} — refusing the batch (nothing "
-                "written; fix or refresh the baseline and restart)"
-            )
+        rows, schema = _psi_gate(
+            spark.read.parquet(baseline_path), batch_df, column, max_psi,
+            f"stream_drift_gate: batch {batch_id}", baseline_path,
+            mode=mode, bins=bins, lo=lo, hi=hi, top_k=top_k,
+        )
         # the report publishes AFTER the gated batch (tuple order)
         return batch_df, spark.createDataFrame(rows, schema)
 

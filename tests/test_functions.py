@@ -393,6 +393,29 @@ def test_embedding_cosine_pairs_golden(spark):
     assert pairs[0].cosine > 0.99
 
 
+def test_embedding_cosine_pairs_gemm_admits_nan_and_overflow_pairs(spark):
+    """The GEMM prefilter must admit every pair the exact rescore keeps: a
+    NaN element makes the exact cosine NaN, which passes ``>=``, and so
+    does the overflow-range pair (the JVM's sequential dot adds
+    ``-1e308 + inf``). The exact per-pair plan keeps 7 pairs here."""
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, nan, 0.0]),
+            (2, [1e154, 1.5e154, 0.0]),
+            (3, [-1e154, 1.5e154, 0.0]),
+            (4, [1.0, 0.0, 0.0]),
+            (5, [0.999, 0.01, 0.0]),
+            (6, [0.0, 0.0, 1.0]),
+        ],
+        "vec_id bigint, embedding array<double>",
+    )
+    got = dd.embedding_cosine_pairs(df, threshold=0.9).collect()
+    assert sorted((p.id_a, p.id_b) for p in got) == [
+        (1, 2), (1, 3), (1, 4), (1, 5), (1, 6), (2, 3), (4, 5)
+    ]
+
+
 # -- similarity ---------------------------------------------------------------
 
 def test_cosine_topk_exact(spark, emb):

@@ -150,6 +150,35 @@ def test_drift_config_node_report_and_gate(spark, tmp_path):
         loader.build_pipeline(loader.parse(cfg(shifted, max_psi=0.1))).run(spark)
 
 
+def test_drift_config_node_gate_ignores_batch_outlier(spark, tmp_path):
+    """The gate bins over the BASELINE's range, as stream_drift_gate
+    does: one far outlier row in the new epoch must not stretch the
+    range until the shifted epoch lands in one bin and passes."""
+    from mini_etl_spark.config import ConfigLoader
+
+    base = str(tmp_path / "baseline.parquet")
+    spark.range(2000).selectExpr("id / 2000.0 AS v").write.parquet(base)
+    shifted = str(tmp_path / "shifted.parquet")
+    spark.range(2000).selectExpr("id / 2000.0 + 0.5 AS v").union(
+        spark.range(1).selectExpr("1000.0 AS v")
+    ).write.parquet(shifted)
+    cfg = {
+        "pipeline": {
+            "name": "drift_outlier",
+            "source": {"type": "parquet", "path": shifted},
+            "transformers": [{"type": "drift", "baseline": base,
+                              "column": "v", "max_psi": 0.25}],
+            "sink": {"type": "parquet",
+                     "path": str(tmp_path / "report.parquet"), "mode": "w"},
+        }
+    }
+    import pytest as pt
+
+    loader = ConfigLoader()
+    with pt.raises(ValueError, match="exceeds max_psi"):
+        loader.build_pipeline(loader.parse(cfg)).run(spark)
+
+
 def test_drift_gate_leaves_nothing_cached(spark, tmp_path):
     """The gated drift node must not leak cached blocks into a
     long-lived session — on the pass path NOR the raise path (the

@@ -437,22 +437,6 @@ def test_token_shards_empty_batch_publishes_nothing(spark, tmp_path):
     assert [(r.doc_id, r.shard) for r in got] == [(1, 0)]
 
 
-def test_state_backup_recovery(spark, tmp_path):
-    """A crash inside the no-overwrite rename fallback leaves only the
-    .bak sibling; _read_state recovers the pre-update doc from it rather
-    than returning {} (the silent offset-reset-to-0 direction). After a
-    successful publish no .bak survives."""
-    from mini_etl_spark.streaming.corpus import _read_state, _write_state
-
-    p = tmp_path / "st.json"
-    (tmp_path / "st.json.bak").write_text('{"offset": 42}')
-    assert _read_state(spark, str(p)) == {"offset": 42}
-
-    _write_state(spark, str(p), {"offset": 50})
-    assert not (tmp_path / "st.json.bak").exists()
-    assert _read_state(spark, str(p)) == {"offset": 50}
-
-
 def test_temperature_mix_legacy_seen_guard(spark, tmp_path):
     """Resuming with the old <out_path>_seen staging present and no
     explicit seen_path raises instead of silently dropping the staged
