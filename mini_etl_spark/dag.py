@@ -38,6 +38,7 @@ from enum import Enum
 from functools import reduce
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,6 +87,7 @@ class PipelineDAG:
         self.edges: dict[str, list[str]] = {}   # node -> downstream nodes
         self.in_edges: dict[str, list[str]] = {}  # node -> upstream nodes (ordered)
         self._ckpt_log: dict[str, list[str]] = {"restored": [], "materialized": []}
+        self._persisted: list[DataFrame] = []  # what build() cached; run() frees
 
     # -- construction --------------------------------------------------------
     def _add(self, node: Node) -> "PipelineDAG":
@@ -452,7 +454,7 @@ class PipelineDAG:
                 df = self._merge(node, inputs)
             elif node.node_type == NodeType.BRANCH:
                 cond = F.expr(node.condition) if isinstance(node.condition, str) else node.condition
-                parent = inputs[0].persist()  # both sides reuse one computation
+                parent = self._persist(inputs[0])  # both sides reuse one computation
                 outputs[f"{name}.match"] = parent.filter(cond)
                 outputs[f"{name}.nomatch"] = parent.filter(~cond)
                 outputs[name] = outputs[f"{name}.match"]
@@ -462,9 +464,19 @@ class PipelineDAG:
             else:  # pragma: no cover
                 raise AssertionError(node.node_type)
             if node.node_type != NodeType.SINK and fanout[name] > 1:
-                df = df.persist()
+                df = self._persist(df)
             outputs[name] = df
         return outputs
+
+    def _persist(self, df: DataFrame) -> DataFrame:
+        """Cache ``df`` for reuse unless its plan is cached already.
+        ``unpersist`` uncaches by plan, so ``run`` must release only what
+        the DAG cached itself: a frame the caller persisted (a source, or
+        a branch's input) keeps its cache entry."""
+        if df.storageLevel == StorageLevel.NONE:
+            df = df.persist()
+            self._persisted.append(df)
+        return df
 
     @staticmethod
     def _merge(node: Node, inputs: list[DataFrame]) -> DataFrame:
@@ -499,12 +511,8 @@ class PipelineDAG:
             upstream = outputs[node.name]
             node.func(upstream)
         duration = time.monotonic() - start
-        # release any persisted fan-out nodes
-        for df in outputs.values():
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 - unpersist of non-persisted is fine
-                pass
+        while self._persisted:  # release the fan-out and branch caches
+            self._persisted.pop().unpersist()
         return {
             "name": self.name,
             "nodes_executed": len(self.nodes),

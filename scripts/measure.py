@@ -10,7 +10,11 @@ Usage:
     python scripts/measure.py --all --tag before          # every key
     python scripts/measure.py --keys ... --runs 3
 
-Prints one JSON line: {"timings": {key: best_sec}, "cold": {...}, "tag": ...}.
+Prints one JSON line: {"timings": {key: best_sec}, "cold": {...},
+"compiles": {key: n}, "tag": ...}. ``compiles`` counts the classes Spark's
+code generator compiled during a key's timed passes (``CodegenMetrics``):
+above 0, the key's generated code does not stay in the codegen cache
+between passes and each pass pays Janino and the JIT again.
 Plans and timings are measurement artifacts only — nothing here is on any
 query path, and nothing caches across runs (same clear_cached_state rule
 as bench.py).
@@ -63,6 +67,9 @@ def main() -> None:
     plans_dir = os.path.join(REPO, "plans", "measure")
     os.makedirs(plans_dir, exist_ok=True)
 
+    compilations = spark.sparkContext._jvm.org.apache.spark.metrics.source \
+        .CodegenMetrics.METRIC_COMPILATION_TIME()
+
     # codegen/scheduler warm-up, untimed
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
 
@@ -83,6 +90,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for key in keys:
         fn = queries[key]
         spark.sparkContext.setJobDescription(f"measure:{key}")
@@ -98,6 +106,7 @@ def main() -> None:
         cold[key] = round(time.monotonic() - t0, 3)
         clear_cached_state()
         best = float("inf")
+        compiled_before = compilations.getCount()
         for _ in range(args.runs):
             # bench.py parity: the timed region covers CONSTRUCTION + action
             # (construction includes any driver-side scalar jobs and eager
@@ -108,9 +117,11 @@ def main() -> None:
             best = min(best, time.monotonic() - t0)
             clear_cached_state()
         timings[key] = round(best, 3)
+        compiles[key] = compilations.getCount() - compiled_before
         spark.sparkContext.setJobDescription(None)
         drain_session_state()
-        print(f"# {key}: warm {timings[key]} cold {cold[key]}", file=sys.stderr)
+        print(f"# {key}: warm {timings[key]} cold {cold[key]} "
+              f"compiles {compiles[key]}", file=sys.stderr)
 
     print(json.dumps({
         "tag": args.tag,
@@ -118,6 +129,7 @@ def main() -> None:
         "timings": timings,
         "total": round(sum(timings.values()), 3),
         "cold": cold,
+        "compiles": compiles,
     }))
 
 

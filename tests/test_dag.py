@@ -134,3 +134,59 @@ def test_topo_and_visualize(spark, two_frames):
     assert order.index("out") > order.index("m")
     viz = dag.visualize()
     assert "[source" in viz and "m -> out" in viz
+
+
+def test_run_keeps_a_persisted_source_cached(spark, two_frames):
+    """``run`` releases only the caches the DAG made: a source frame the
+    caller persisted stays cached after a one-sink run."""
+    from pyspark import StorageLevel
+
+    a, _ = two_frames
+    src = a.filter("k > 0").persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        dag = (
+            PipelineDAG("keep_src")
+            .add_source("src", src)
+            .add_sink("out", null_sink())
+            .add_edge("src", "out")
+        )
+        dag.run(spark)
+        assert src.storageLevel == StorageLevel.MEMORY_AND_DISK
+    finally:
+        src.unpersist()
+
+
+def test_run_keeps_a_persisted_branch_input_cached(spark, two_frames):
+    """A branch's input that the caller persisted keeps its cache entry,
+    while the fan-out cache the DAG made itself is released."""
+    from pyspark import StorageLevel
+
+    a, _ = two_frames
+    src = a.filter("k > 0").persist(StorageLevel.MEMORY_AND_DISK)
+    fanout = src.withColumn("x", src.v * 2)
+    try:
+        dag = (
+            PipelineDAG("keep_branch")
+            .add_source("src", src)
+            .add_branch("split", "v > 15")
+            .add_sink("hi", null_sink())
+            .add_sink("lo", null_sink())
+            .add_edge("src", "split")
+            .add_edge("split", "hi", port="match")
+            .add_edge("split", "lo", port="nomatch")
+        )
+        dag.run(spark)
+        assert src.storageLevel == StorageLevel.MEMORY_AND_DISK
+
+        mine = (
+            PipelineDAG("own_cache")
+            .add_source("fan", fanout)
+            .add_sink("s1", null_sink())
+            .add_sink("s2", null_sink())
+            .add_edge("fan", "s1").add_edge("fan", "s2")
+        )
+        mine.run(spark)
+        assert fanout.storageLevel == StorageLevel.NONE
+        assert src.storageLevel == StorageLevel.MEMORY_AND_DISK
+    finally:
+        src.unpersist()

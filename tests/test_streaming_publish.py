@@ -1,7 +1,7 @@
 """The shared publication protocol of the streaming sinks
 (mini_etl_spark/streaming/publish.py): snapshot publication on URI
-targets, the query-start flags and triggers on every checkpointed sink,
-and the checkpoint file manager local sessions commit through."""
+targets, and the query-start flags and triggers on every checkpointed
+sink."""
 
 from __future__ import annotations
 
@@ -205,30 +205,6 @@ def test_continuous_query_is_paced(spark, tmp_path):
     assert not query.isActive
     assert _trigger(query).getClass().getSimpleName().startswith(
         "AvailableNowTrigger")
-
-
-_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
-_SQL_STREAMING = "org.apache.spark.sql.execution.streaming.checkpointing."
-
-
-def test_local_session_checkpoints_through_filesystem_manager(spark):
-    """``get_spark`` on a local master commits checkpoints through the
-    FileSystem-based manager (no forked ``chmod``/``readlink`` per
-    rename), and ``extra_conf`` still overrides it."""
-    from mini_etl_spark.session import get_spark
-
-    assert spark.conf.get(_MANAGER_KEY) == (
-        _SQL_STREAMING + "FileSystemBasedCheckpointFileManager")
-    other = _SQL_STREAMING + "FileContextBasedCheckpointFileManager"
-    try:
-        # the builder re-applies its runtime confs to the shared session:
-        # pass the fixture's own arguments so only the manager changes
-        session = get_spark("mini-etl-spark-tests", shuffle_partitions=8,
-                            extra_conf={_MANAGER_KEY: other})
-        assert session.conf.get(_MANAGER_KEY) == other
-    finally:
-        spark.conf.set(_MANAGER_KEY,
-                       _SQL_STREAMING + "FileSystemBasedCheckpointFileManager")
 
 
 def test_continuous_file_sink_stop_mid_stream_restart_exactly_once(
