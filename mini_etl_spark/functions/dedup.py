@@ -189,6 +189,18 @@ def _jaccard_ratio_tail(
     )
 
 
+def _shared_counts(postings: DataFrame) -> DataFrame:
+    """(id_a < id_b, ``__shared``) for every pair of ids sharing at least
+    one element of an element-postings frame (``__id``, ``__g``): the
+    inverted-index self-join, never the O(N²) pair space."""
+    a, b = postings.alias("a"), postings.alias("b")
+    return (
+        a.join(b, (F.col("a.__g") == F.col("b.__g")) & (F.col("a.__id") < F.col("b.__id")))
+        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("__shared"))
+    )
+
+
 def _jaccard_from_postings(
     sizes: DataFrame, postings: DataFrame, threshold: float
 ) -> DataFrame:
@@ -197,13 +209,7 @@ def _jaccard_from_postings(
     shared inverted-index self-join + ratio tail of :func:`jaccard_pairs`
     (shingle sets) and :func:`set_jaccard_pairs` (arbitrary element
     sets)."""
-    a, b = postings.alias("a"), postings.alias("b")
-    shared = (
-        a.join(b, (F.col("a.__g") == F.col("b.__g")) & (F.col("a.__id") < F.col("b.__id")))
-        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("__shared"))
-    )
-    return _jaccard_ratio_tail(shared, sizes, threshold)
+    return _jaccard_ratio_tail(_shared_counts(postings), sizes, threshold)
 
 
 def containment_dedup_pairs(
@@ -228,16 +234,10 @@ def containment_dedup_pairs(
     shingle lowers the reported containment (lower bound), sizes
     unchanged. Returns (id_a, id_b, containment) rounded to 4."""
     sizes, postings = _pair_shingle_stats(df, text_col, id_col, n, max_shingle_freq)
-    a, b = postings.alias("a"), postings.alias("b")
-    shared = (
-        a.join(b, (F.col("a.__g") == F.col("b.__g")) & (F.col("a.__id") < F.col("b.__id")))
-        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("__shared"))
-    )
     sa = sizes.select(F.col("__id").alias("id_a"), F.col("__size").alias("__sa"))
     sb = sizes.select(F.col("__id").alias("id_b"), F.col("__size").alias("__sb"))
     return (
-        shared.join(sa, "id_a")
+        _shared_counts(postings).join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn(
             "containment",
@@ -289,24 +289,8 @@ def set_jaccard_pairs(
     be an expensive decode, e.g. video frames). Rows with empty/NULL
     sets produce no pairs. Returns (id_a, id_b, jaccard) rounded to 4.
     """
-    from pyspark.sql.types import ArrayType, BinaryType
-
-    st = df.schema[set_col].dataType
-    is_binary = isinstance(st, ArrayType) and isinstance(
-        st.elementType, BinaryType
-    )
-    e = F.col("__e")
-    key = F.md5(e if is_binary else e.cast("string").cast("binary"))
-    elems = (
-        df.select(
-            F.col(id_col).alias("__id"),
-            F.explode_outer(F.array_distinct(F.col(set_col))).alias("__e"),
-        )
-        .filter(F.col("__e").isNotNull())
-        .select("__id", key.alias("__g"))
-        .persist()
-    )
-    sizes = elems.groupBy("__id").agg(F.count(F.lit(1)).alias("__size"))
+    elems, sizes = _set_postings(df, set_col, id_col)
+    elems.persist()
     postings = elems
     if max_element_freq is not None:
         freq = elems.groupBy("__g").agg(F.count(F.lit(1)).alias("__f"))
@@ -366,6 +350,17 @@ def set_jaccard_pairs_exact(
     budgeted :func:`set_jaccard_pairs` when a hard work bound matters
     more than exactness; prefer this form over ``max_element_freq=None``
     always."""
+    elems, sizes = _set_postings(df, set_col, id_col)
+    return _prefix_exact_pairs(elems, sizes, threshold, naive_volume_limit)
+
+
+def _set_postings(
+    df: DataFrame, set_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(element postings ``(__id, __g)``, sizes ``(__id, __size)``) of a
+    set-valued column, shared by both set-Jaccard joins: distinct non-NULL
+    elements per row, each keyed by the md5 of its raw bytes (BINARY
+    elements) or of its canonical string form (everything else)."""
     from pyspark.sql.types import ArrayType, BinaryType
 
     st = df.schema[set_col].dataType
@@ -383,7 +378,7 @@ def set_jaccard_pairs_exact(
         .select("__id", key.alias("__g"))
     )
     sizes = elems.groupBy("__id").agg(F.count(F.lit(1)).alias("__size"))
-    return _prefix_exact_pairs(elems, sizes, threshold, naive_volume_limit)
+    return elems, sizes
 
 
 def _prefix_exact_pairs(
@@ -1302,13 +1297,6 @@ def simhash_pairs(
     )
 
 
-# Broadcast ceiling for connected-component state frames (node-bounded:
-# labels / per-round min tables, two longs per row). 10M rows x 16B is
-# ~160 MB of payload — comfortable on any real executor; beyond it the
-# planner's shuffle strategies take over.
-_CC_BROADCAST_STATE_LIMIT = 10_000_000
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -1382,20 +1370,9 @@ def connected_components(
             )
             .localCheckpoint(eager=True)
         )
-        # The label state is a checkpointed frame — no size stats — so the
-        # per-round joins lower to sort-merge, exchanging AND sorting the
-        # (bigger) edge list every round. The node set is O(V) and fixed
-        # across rounds: one metadata-cheap count decides to broadcast the
-        # state frames instead (same checkpoint-kills-broadcast fix as
-        # graph.pagerank; above the limit the planner's strategies stand).
-        _bc = (
-            F.broadcast
-            if labels.count() <= _CC_BROADCAST_STATE_LIMIT
-            else (lambda d: d)
-        )
         for _ in range(max_iter):
             nbr = (
-                edges.join(_bc(labels), edges.src == labels.node)
+                edges.join(labels, edges.src == labels.node)
                 .groupBy("dst")
                 .agg(F.min("label").alias("__nbr_label"))
             )
@@ -1403,7 +1380,7 @@ def connected_components(
             # convergence check is a filter over the checkpointed frame —
             # no old-vs-new join, no recompute.
             cand = (
-                labels.join(_bc(nbr), labels.node == nbr.dst, "left")
+                labels.join(nbr, labels.node == nbr.dst, "left")
                 .select(
                     "node",
                     F.col("label").alias("__old"),
@@ -1481,14 +1458,6 @@ def _star_components(
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
-        # same stats-blind-checkpoint issue as label mode: the per-round
-        # min tables are node-bounded, so broadcast them while the edge
-        # set (known exactly from the convergence signature) stays small
-        _bc = (
-            F.broadcast
-            if sig[0] <= _CC_BROADCAST_STATE_LIMIT
-            else (lambda d: d)
-        )
         # ---- large-star: both directions; neighbors v > u hook to m(u)
         both = edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1497,7 +1466,7 @@ def _star_components(
             F.least(F.min("dst"), F.first("src")).alias("__m")
         )
         ls = (
-            both.join(_bc(mins), "src")
+            both.join(mins, "src")
             .filter(F.col("dst") > F.col("src"))
             .select(
                 F.least(F.col("dst"), F.col("__m")).alias("src"),
@@ -1516,7 +1485,7 @@ def _star_components(
         )
         smins = oriented.groupBy("big").agg(F.min("small").alias("__m"))
         ss = (
-            oriented.join(_bc(smins), "big")
+            oriented.join(smins, "big")
             .select(
                 F.col("__m").alias("src"),
                 F.col("small").alias("dst"),

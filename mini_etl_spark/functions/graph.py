@@ -67,7 +67,6 @@ def pagerank(
     dst: str = "dst",
     dangling: str = "teleport",
     personalized: list | None = None,
-    broadcast_state_limit: int = 10_000_000,
 ) -> DataFrame:
     """(node, rank) after ``iterations`` of the power method:
     rank = (1 − d) + d · Σ_in rank(u)/out_degree(u), uniform start at 1.0
@@ -101,6 +100,14 @@ def pagerank(
     seeds (the consistent PPR formulation — sinks teleport by the same
     distribution). Kept un-normalized like the classic mode (Σ rank
     stays ~N with redistribute).
+
+    Join strategies are the planner's, picked from size estimates
+    against ``spark.sql.autoBroadcastJoinThreshold``. The checkpointed
+    O(V) state keeps its estimate and broadcasts against the routing
+    table; between checkpoints the lazily chained state's estimate grows
+    with each outer join, so those iterations may sort-merge instead (at
+    sf0.1, 2 of the 6 state joins — measured no slower than forcing a
+    broadcast).
     """
     if iterations < 1:
         raise ValueError("pagerank: iterations must be >= 1")
@@ -130,24 +137,20 @@ def pagerank(
     routed = e.join(out_deg, "src").persist()
 
     try:
-        # The node count drives the join strategy every iteration: the rank
-        # state is a localCheckpoint frame, which reports NO size stats, so
-        # without an explicit hint the per-iteration joins lower to
-        # sort-merge — the (much larger) routing table gets exchanged and
-        # sorted once per iteration for a state table that is O(V) and tiny
-        # on most graphs. Broadcasting rank/contrib frames whenever
-        # V <= broadcast_state_limit (10M nodes × 16B ≈ 160 MB — fine on a
-        # real executor) keeps `routed` pinned in place all rounds; above
-        # the limit the planner's shuffle strategies take over. `nodes` is
-        # persisted, so the count is one cheap job (redistribute and
-        # personalized modes needed it anyway).
-        n_nodes = nodes.count()
-        _hint = F.broadcast if n_nodes <= broadcast_state_limit else (lambda d: d)
         if dangling == "redistribute":
             # static sink set (no out-edges) — one pass
             sinks = nodes.join(
                 out_deg.select(F.col("src").alias("node")), "node", "left_anti"
             ).localCheckpoint(eager=True)
+            # each iteration's sink mass spreads over all N nodes, or over
+            # the seeds: sinks teleport by the personalization distribution
+            if seeds_list is None:
+                dang_share = F.col("__dang") / F.lit(float(nodes.count()))
+            else:
+                dang_share = F.when(
+                    F.col("node").isin(seeds_list),
+                    F.col("__dang") / F.lit(float(len(seeds_list))),
+                ).otherwise(F.lit(0.0))
 
         if seeds_list is None:
             tele = F.lit(1.0 - damping)
@@ -183,7 +186,7 @@ def pagerank(
                 )
             # whole teleport mass on the seeds; float chain fixed as
             # ((1-d) * N) / |S| so SQL oracles replay the same double
-            per_seed = ((1.0 - damping) * float(n_nodes)) / float(
+            per_seed = ((1.0 - damping) * float(nodes.count())) / float(
                 len(seeds_list)
             )
             tele = F.when(
@@ -193,7 +196,7 @@ def pagerank(
         ranks = nodes.select("node", F.lit(1.0).alias("rank"))
         for _i in range(iterations):
             contrib = (
-                routed.join(_hint(ranks), routed.src == ranks.node)
+                routed.join(ranks, routed.src == ranks.node)
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") / F.col("__deg")).alias("__in"))
             )
@@ -204,23 +207,13 @@ def pagerank(
                 dang = ranks.join(sinks, "node", "left_semi").agg(
                     F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dang")
                 )
-                if seeds_list is None:
-                    dang_share = F.col("__dang") / F.lit(float(n_nodes))
-                else:
-                    # sinks teleport by the personalization distribution
-                    dang_share = F.when(
-                        F.col("node").isin(seeds_list),
-                        F.col("__dang") / F.lit(float(len(seeds_list))),
-                    ).otherwise(F.lit(0.0))
                 incoming = F.coalesce("__in", F.lit(0.0)) + dang_share
                 merged = nodes.join(
-                    _hint(contrib), nodes.node == contrib.dst, "left"
+                    contrib, nodes.node == contrib.dst, "left"
                 ).crossJoin(F.broadcast(dang))
             else:
                 incoming = F.coalesce("__in", F.lit(0.0))
-                merged = nodes.join(
-                    _hint(contrib), nodes.node == contrib.dst, "left"
-                )
+                merged = nodes.join(contrib, nodes.node == contrib.dst, "left")
             # localCheckpoint (eager) materializes the state AND cuts its
             # lineage; old blocks are released by the context cleaner when
             # the previous frame is dropped. But every eager checkpoint is
@@ -258,11 +251,16 @@ def pagerank(
     return ranks
 
 
+# Row ceiling for broadcasting triangle_count's canonical edge set: two
+# longs per row, so 8M rows is ~128 MB of payload, inside executor memory
+# on any real cluster. Above it the planner's shuffle strategies stand.
+_TRIANGLE_BROADCAST_EDGE_LIMIT = 8_000_000
+
+
 def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    broadcast_edge_limit: int = 8_000_000,
 ) -> DataFrame:
     """Total triangle count in the UNDIRECTED graph induced by the edge
     list (direction and duplicate/self edges ignored): one row
@@ -273,15 +271,16 @@ def triangle_count(
     counted exactly once. Two equi-joins, no explosion of both edge
     directions.
 
-    When the canonical edge set has at most ``broadcast_edge_limit`` rows
-    (two longs each — 8M rows is ~128 MB of key/value payload, well inside
-    executor memory on any real cluster) both joins broadcast it, so the
-    2-path stream — the Σ deg² blowup, orders of magnitude larger than the
-    edge set itself — is generated and closed inside one pipelined stage
-    and never shuffled or sorted. Above the limit the joins fall back to
-    shuffle strategies chosen by the planner. The edge set is checkpointed
-    anyway, so the row count used for the decision is a metadata read, not
-    an extra job over the input."""
+    When the canonical edge set has at most 8M rows both joins broadcast
+    it, so the 2-path stream — the Σ deg² blowup, orders of magnitude
+    larger than the edge set itself — is generated and closed inside one
+    pipelined stage and never shuffled or sorted. Above that the joins
+    fall back to shuffle strategies chosen by the planner. The decision
+    reads the checkpointed edge set's exact row count, not the planner's
+    size estimate: a self-joined edge list (the usual input) carries the
+    join's estimate through the checkpoint, which at sf0.1 read 3.0e12 B
+    for 453,588 rows, so the planner alone sort-merges both joins
+    (``triangles`` measured 21.6 s → 52.7 s, best of 3 passes)."""
     # localCheckpoint, not persist: the canonical edge set serves three
     # join references, then must NOT stay pinned in executor storage after
     # the one-row aggregate is consumed — checkpoint blocks are freed by
@@ -303,11 +302,12 @@ def triangle_count(
         .repartition(sc.defaultParallelism)
         .localCheckpoint(eager=True)
     )
-    # A checkpointed frame reports no size stats to the planner, so without
-    # the explicit hint BOTH joins become sort-merge: the Σ deg² 2-path
-    # stream gets exchanged AND sorted — the dominant cost of the whole
-    # operator (measured 12.8x slower at sf0.1).
-    small = und.count() <= broadcast_edge_limit
+    # The planner's estimate of `und` is inherited from its input plan and
+    # can overshoot the real size by orders of magnitude (see docstring);
+    # without the hint BOTH joins sort-merge, exchanging and sorting the
+    # Σ deg² 2-path stream. The exact row count is one job over the
+    # checkpoint blocks.
+    small = und.count() <= _TRIANGLE_BROADCAST_EDGE_LIMIT
     hint = F.broadcast if small else (lambda df: df)
     ab = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
     bc = hint(und.select(F.col("a").alias("y2"), F.col("b").alias("z")))

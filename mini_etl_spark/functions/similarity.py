@@ -1325,13 +1325,6 @@ def _pq_sqdist_sql(vec_col: str, start: int, centroid) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _pq_sqdist_expr(vec_col: str, start: int, centroid) -> Column:
-    """Σ (vec[start+t] − c_t)² as an explicit left-associated codegen sum —
-    term order is pinned so an external engine writing the same explicit
-    sum reproduces the double result bit-for-bit."""
-    return F.expr(_pq_sqdist_sql(vec_col, start, centroid))
-
-
 def pq_codes(
     df: DataFrame,
     codebooks: np.ndarray,

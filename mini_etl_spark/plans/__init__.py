@@ -17,7 +17,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
@@ -77,6 +77,44 @@ def executed_codegen_stages(df: DataFrame) -> int:
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()  # type: ignore[attr-defined]
     return len(set(re.findall(r"\*\((\d+)\)", final)))
+
+
+def last_execution_id(spark: SparkSession) -> int:
+    """Id of the newest SQL execution the session has recorded (-1 if
+    none): the ``after`` bound for :func:`executed_joins`."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+def executed_joins(
+    spark: SparkSession, after: int = -1
+) -> list[tuple[int, str, list[str]]]:
+    """The join strategies that actually ran: ``(execution id,
+    description, join operator names)`` for every SQL execution with id
+    above ``after``, read from each execution's plan graph in the
+    session's status store. Under AQE that graph is the final plan (a
+    sort-merge join demoted at run time shows as BroadcastHashJoin), and
+    it includes the plan of every cached relation the execution scanned.
+    The store keeps the newest ``spark.sql.ui.retainedExecutions``
+    executions (1000 by default)."""
+    # the store is fed by the asynchronous listener bus: drain it so the
+    # finished executions and their final plans are all recorded
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = []
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        if ex.executionId() <= after:
+            continue
+        nodes = store.planGraph(ex.executionId()).allNodes()
+        names = (nodes.apply(j).name() for j in range(nodes.size()))
+        out.append((
+            ex.executionId(),
+            ex.description(),
+            [n for n in names if n.endswith("Join") or n == "CartesianProduct"],
+        ))
+    return out
 
 
 def explain_summary(df: DataFrame) -> str:

@@ -11,10 +11,15 @@ Usage:
     python scripts/measure.py --keys ... --runs 3
 
 Prints one JSON line: {"timings": {key: best_sec}, "cold": {...},
-"compiles": {key: n}, "tag": ...}. ``compiles`` counts the classes Spark's
-code generator compiled during a key's timed passes (``CodegenMetrics``):
-above 0, the key's generated code does not stay in the codegen cache
-between passes and each pass pays Janino and the JIT again.
+"compiles": {key: n}, "joins": {key: {operator: n}}, "tag": ...}.
+``compiles`` counts the classes Spark's code generator compiled during a
+key's timed passes (``CodegenMetrics``): above 0, the key's generated code
+does not stay in the codegen cache between passes and each pass pays
+Janino and the JIT again. ``joins`` counts the join operators
+(BroadcastHashJoin, SortMergeJoin, ...) in the final, post-AQE plans of
+the key's timed passes (``plans.executed_joins``): the strategy that ran,
+not the one the static plan chose. A cached relation's plan is counted in
+every execution that scans it.
 Plans and timings are measurement artifacts only — nothing here is on any
 query path, and nothing caches across runs (same clear_cached_state rule
 as bench.py).
@@ -27,6 +32,7 @@ import json
 import os
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -51,6 +57,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entry
+    from mini_etl_spark import plans
     from mini_etl_spark.session import get_spark
 
     spark = get_spark("measure")
@@ -91,6 +98,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     compiles: dict[str, int] = {}
+    joins: dict[str, dict[str, int]] = {}
     for key in keys:
         fn = queries[key]
         spark.sparkContext.setJobDescription(f"measure:{key}")
@@ -107,6 +115,7 @@ def main() -> None:
         clear_cached_state()
         best = float("inf")
         compiled_before = compilations.getCount()
+        executed_before = plans.last_execution_id(spark)
         for _ in range(args.runs):
             # bench.py parity: the timed region covers CONSTRUCTION + action
             # (construction includes any driver-side scalar jobs and eager
@@ -118,6 +127,10 @@ def main() -> None:
             clear_cached_state()
         timings[key] = round(best, 3)
         compiles[key] = compilations.getCount() - compiled_before
+        joins[key] = dict(sorted(Counter(
+            j for _, _, js in plans.executed_joins(spark, executed_before)
+            for j in js
+        ).items()))
         spark.sparkContext.setJobDescription(None)
         drain_session_state()
         print(f"# {key}: warm {timings[key]} cold {cold[key]} "
@@ -130,6 +143,7 @@ def main() -> None:
         "total": round(sum(timings.values()), 3),
         "cold": cold,
         "compiles": compiles,
+        "joins": joins,
     }))
 
 

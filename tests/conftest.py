@@ -82,3 +82,21 @@ def nulls_df(spark):
         }
     )
     return spark.createDataFrame(pdf)
+
+
+def record_dataframe_calls(monkeypatch, method: str) -> list:
+    """Wrap ``DataFrame.<method>`` for one test: every call appends its
+    DataFrame to the returned list, then runs the real method.
+    Spark 4's ``pyspark.sql.DataFrame`` is a facade; classic sessions run
+    instances of the classic subclass, so that is the class patched."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls: list = []
+    orig = getattr(DataFrame, method)
+
+    def wrapper(self, *args, **kwargs):
+        calls.append(self)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, method, wrapper)
+    return calls

@@ -19,7 +19,7 @@ from mini_etl_spark.functions import multimodal as mm
 from mini_etl_spark.functions import similarity as sim
 from mini_etl_spark.functions import text as tx
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, record_dataframe_calls
 
 
 @pytest.fixture(scope="module")
@@ -254,6 +254,47 @@ def test_connected_components_star_chain_logn_rounds(spark):
 
     with pytest.raises(ValueError):
         dd.connected_components(pairs, algorithm="bfs")
+
+
+def test_connected_components_rounds_broadcast_unhinted(spark, tmp_path):
+    """The per-round label state is a localCheckpoint frame that keeps its
+    size estimate, so over a parquet-backed pair list the planner
+    broadcasts it on its own: every round's two joins ran as
+    BroadcastHashJoin, and no round sort-merged the edge list."""
+    from mini_etl_spark import plans
+
+    spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 60, 2)] + [(0, 2), (4, 8)],
+        "id_a bigint, id_b bigint",
+    ).write.parquet(str(tmp_path / "pairs"))
+    pairs = spark.read.parquet(str(tmp_path / "pairs"))
+    before = plans.last_execution_id(spark)
+    dd.connected_components(pairs).collect()
+    checkpoints = [
+        joins
+        for _, desc, joins in plans.executed_joins(spark, before)
+        if desc.startswith("localCheckpoint")
+    ]
+    # the first checkpoint seeds the labels (no join); then one per round
+    assert checkpoints[0] == [] and len(checkpoints) >= 3, checkpoints
+    for joins in checkpoints[1:]:
+        assert joins == ["BroadcastHashJoin", "BroadcastHashJoin"], checkpoints
+
+
+def test_connected_components_counts_once_per_round(spark, monkeypatch):
+    """Label propagation runs one convergence count per round and no
+    other count job (no node count sizing a broadcast decision)."""
+    counts = record_dataframe_calls(monkeypatch, "count")
+    checkpoints = record_dataframe_calls(monkeypatch, "localCheckpoint")
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11)],
+        "id_a bigint, id_b bigint",
+    )
+    dd.connected_components(pairs).collect()
+    # the first checkpoint seeds the labels; then one per round
+    rounds = len(checkpoints) - 1
+    assert rounds >= 2
+    assert len(counts) == rounds
 
 
 def test_drop_near_duplicates_keeps_representatives(spark):

@@ -6,7 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from mini_etl_spark import plans
 from mini_etl_spark.functions.graph import degree_stats, pagerank, triangle_count
+from tests.conftest import record_dataframe_calls
 
 
 def _edges(spark, pairs):
@@ -62,6 +64,32 @@ def test_triangle_count_known_graphs(spark):
     assert tri(k4 + [(2, 1), (3, 3), (1, 2)]) == 4
     # a 4-cycle has none
     assert tri([(1, 2), (2, 3), (3, 4), (4, 1)]) == 0
+
+
+def test_triangles_closure_stays_broadcast_semi(spark):
+    from mini_etl_spark.functions import graph
+
+    edges = spark.createDataFrame(
+        [(i, j) for i in range(30) for j in range(i + 1, 30) if (i + j) % 3]
+        , ["src", "dst"]
+    )
+    df = graph.triangle_count(edges)
+    plan = plans.physical_plan(df)
+    assert "SortMergeJoin" not in plan, plan
+    assert plan.count("BroadcastHashJoin") >= 2, plan
+    assert "LeftSemi" in plan, plan
+
+
+def test_pagerank_counts_nodes_only_where_used(spark, monkeypatch):
+    """The node count N is one job; only the modes whose float chain
+    uses N run it (redistribute spreads sink mass over N nodes), so
+    the default teleport mode runs no count at all."""
+    counts = record_dataframe_calls(monkeypatch, "count")
+    e = _edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4)])
+    pagerank(e, iterations=3).collect()
+    assert len(counts) == 0
+    pagerank(e, iterations=3, dangling="redistribute").collect()
+    assert len(counts) == 1
 
 
 def _reference_pagerank_redistribute(pairs, iterations, damping=0.85):

@@ -3,12 +3,6 @@
 Structural pins (so a refactor cannot silently re-introduce removed
 work) plus bit-level equivalence tests for the rewritten fast paths:
 
-- iterative state joins (``pagerank``, ``connected_components``) must
-  broadcast the node-bounded state each round, never sort-merge the
-  routing table / edge list per round (the r12 fix, now pinned — the
-  returned frames are checkpoint-truncated, so the per-round plans are
-  captured by wrapping ``localCheckpoint``);
-- ``triangle_count``'s closure joins stay broadcast + left-semi;
 - ``ivf_assign``'s Arrow twin is bit-identical to the expression form
   on adversarial inputs (nulls, NaN, ragged lengths, ties, ±0.0) and on
   dense random batches;
@@ -28,7 +22,6 @@ work) plus bit-level equivalence tests for the rewritten fast paths:
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 import numpy as np
@@ -37,89 +30,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mini_etl_spark import plans  # noqa: E402
-
-
-def _capture_checkpoint_plans(monkeypatch):
-    """Wrap DataFrame.localCheckpoint to record each frame's physical
-    plan at checkpoint time (the per-round state of iterative
-    operators), then run the real checkpoint."""
-    # Spark 4: pyspark.sql.DataFrame is a facade; classic sessions run
-    # instances of the classic subclass, whose methods override it —
-    # patch the class the instances actually resolve to
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    captured: list[str] = []
-    orig = DataFrame.localCheckpoint
-
-    def wrapper(self, eager=True):
-        captured.append(plans.physical_plan(self))
-        return orig(self, eager=eager)
-
-    monkeypatch.setattr(DataFrame, "localCheckpoint", wrapper)
-    return captured
-
-
-def _join_nodes(plan: str) -> list[str]:
-    return re.findall(
-        r"^\(\d+\) (SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|"
-        r"BroadcastNestedLoopJoin|CartesianProduct)",
-        plan,
-        re.M,
-    )
-
-
-def test_pagerank_rounds_broadcast_state(spark, monkeypatch):
-    from mini_etl_spark.functions import graph
-
-    captured = _capture_checkpoint_plans(monkeypatch)
-    edges = spark.createDataFrame(
-        [(i, (i * 7 + 1) % 40) for i in range(200)], ["src", "dst"]
-    )
-    graph.pagerank(edges, iterations=5).collect()
-    round_plans = [p for p in captured if "rank" in p]
-    assert round_plans, "no per-round state plans captured"
-    for p in round_plans:
-        joins = _join_nodes(p)
-        # exactly one SMJ may appear: the ONE-TIME routing-table build
-        # (edges × out-degrees), which lives inside the persisted
-        # InMemoryRelation's printed lineage and never re-executes. The
-        # per-round state joins (contrib, merge) must all be broadcast —
-        # pre-r12 every round sort-merged the routing table.
-        assert joins.count("SortMergeJoin") <= 1, p
-        assert joins.count("BroadcastHashJoin") >= 2, p
-
-
-def test_connected_components_rounds_broadcast_state(spark, monkeypatch):
-    from mini_etl_spark.functions import dedup as dd
-
-    captured = _capture_checkpoint_plans(monkeypatch)
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 60, 2)] + [(0, 2), (4, 8)],
-        ["id_a", "id_b"],
-    )
-    dd.connected_components(pairs).collect()
-    # per-round candidate frames (join of labels with neighbor mins);
-    # the init frame has no join — filter to plans that do
-    round_plans = [p for p in captured if _join_nodes(p)]
-    assert round_plans, "no per-round label plans captured"
-    for p in round_plans:
-        joins = _join_nodes(p)
-        assert "SortMergeJoin" not in joins, p
-        assert "BroadcastHashJoin" in joins, p
-
-
-def test_triangles_closure_stays_broadcast_semi(spark):
-    from mini_etl_spark.functions import graph
-
-    edges = spark.createDataFrame(
-        [(i, j) for i in range(30) for j in range(i + 1, 30) if (i + j) % 3]
-        , ["src", "dst"]
-    )
-    df = graph.triangle_count(edges)
-    plan = plans.physical_plan(df)
-    assert "SortMergeJoin" not in plan, plan
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-    assert "LeftSemi" in plan, plan
 
 
 ADVERSARIAL_VECS = [
