@@ -4,8 +4,10 @@ The engine's scale guarantees are *plan properties*: filters reach the
 parquet scan (PushedFilters), projections prune the read schema, small
 dimension joins broadcast, hot expressions stay inside WholeStageCodegen.
 These helpers turn those properties into assertions — used by the test
-suite (tests/test_plans.py) and available to users for their own pipelines
-(`explain_summary(df)` for a one-line audit).
+suite (tests/test_plans.py; tests/test_query_plans_audit.py pins every
+declared query's ``signature`` in the ledger plans/signatures.json) and
+available to users for their own pipelines (`explain_summary(df)` for a
+one-line audit).
 
 This replaces nothing in the reference (it has no plans to inspect —
 SURVEY §4.1); it is how this engine keeps itself honest about Catalyst
@@ -15,6 +17,7 @@ actually applying the optimizations the reference did by hand.
 from __future__ import annotations
 
 import re
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,13 +30,59 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
+# "(n) Name [codegen id : k]": the detail header each node prints once
+# (the tree above the details prints every node a second time)
+_HEADER = re.compile(
+    r"^\((\d+)\) ([^\[\n]+?)(?: \[codegen id : (\d+)\])?(?: \[.*\])? *$", re.M
+)
+# a window spec lists its partition columns before the first "col ASC/DESC
+# NULLS ..." order entry, so a spec that opens with an order entry is global
+_GLOBAL_WINDOW = re.compile(r"windowspecdefinition\([^(),]+ (?:ASC|DESC) NULLS")
+
+
+def _nodes(plan: str) -> list[tuple[str, str | None, str]]:
+    """``(name, codegen id, detail text)`` for each node of a formatted
+    plan, once each, without AQE's runtime wrappers (``AQEShuffleRead``,
+    ``*QueryStage``), which a cached relation that already ran lists in
+    its final plan."""
+    heads = list(_HEADER.finditer(plan))
+    return [
+        (m.group(2), m.group(3), plan[m.end():nxt.start() if nxt else len(plan)])
+        for m, nxt in zip(heads, heads[1:] + [None])
+        if m.group(2) != "AQEShuffleRead" and not m.group(2).endswith("QueryStage")
+    ]
+
+
+def _signature(nodes: list[tuple[str, str | None, str]]) -> Counter:
+    sig: Counter = Counter(name for name, _, _ in nodes)
+    for _, _, detail in nodes:
+        if re.search(r"PushedFilters: \[[^\]]", detail):
+            sig["pushed_filter_scans"] += 1
+        if _GLOBAL_WINDOW.search(detail):
+            sig["global_windows"] += 1
+    return sig
+
+
+def signature(df: DataFrame) -> Counter:
+    """Operator-name counts of ``df``'s static physical plan, one per node
+    (``Exchange``, ``BroadcastHashJoin``, ``Expand``, ``Scan parquet``,
+    ...), plus ``pushed_filter_scans`` (scans with a non-empty
+    PushedFilters) and ``global_windows`` (nodes computing a window with
+    no partition spec: the single-partition funnel). Counts of absent
+    operators read 0.
+
+    The plan takes in every relation the session has cached that matches
+    a subplan, and a cached relation that already ran adds its final
+    adaptive plan: compare signatures of frames built on a cleared cache
+    (``spark.catalog.clearCache()``)."""
+    return _signature(_nodes(physical_plan(df)))
+
+
 @dataclass
 class PlanSummary:
     pushed_filters: list[str]
     read_schemas: list[str]
     joins: list[str]
-    has_broadcast_join: bool
-    has_sort_merge_join: bool
     exchanges: int
     codegen_stages: int
     aqe: bool
@@ -49,21 +98,17 @@ class PlanSummary:
 
 
 def summarize(df: DataFrame) -> PlanSummary:
-    plan = physical_plan(df, "formatted")
-    # codegen stage markers only appear in simple mode in Spark 4 ("*(N) Op")
-    simple = physical_plan(df, "simple")
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    schemas = re.findall(r"ReadSchema: (\S+)", plan)
-    joins = re.findall(r"(\w*(?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin)\w*)", plan)
+    nodes = _nodes(physical_plan(df))
+    sig = _signature(nodes)
+    details = "".join(detail for _, _, detail in nodes)
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", details)
     return PlanSummary(
         pushed_filters=[p for p in pushed if p.strip()],
-        read_schemas=schemas,
-        joins=sorted(set(joins)),
-        has_broadcast_join="BroadcastHashJoin" in plan,
-        has_sort_merge_join="SortMergeJoin" in plan,
-        exchanges=len(re.findall(r"\bExchange\b|\bShuffleExchange", plan)),
-        codegen_stages=len(set(re.findall(r"\*\((\d+)\)", simple))),
-        aqe="AdaptiveSparkPlan" in plan,
+        read_schemas=re.findall(r"ReadSchema: (\S+)", details),
+        joins=sorted(n for n in sig if n.endswith("Join")),
+        exchanges=sig["Exchange"],
+        codegen_stages=len({cg for _, cg, _ in nodes if cg}),
+        aqe=sig["AdaptiveSparkPlan"] > 0,
     )
 
 
@@ -143,14 +188,3 @@ def assert_read_schema_only(df: DataFrame, columns: set[str]) -> None:
                 f"scan reads unpruned columns {sorted(extra)} (schema {schema})"
             )
 
-
-def assert_broadcast_join(df: DataFrame) -> None:
-    s = summarize(df)
-    if not s.has_broadcast_join:
-        raise AssertionError(f"expected a BroadcastHashJoin; joins={s.joins}")
-
-
-def assert_no_cartesian(df: DataFrame) -> None:
-    plan = physical_plan(df, "formatted")
-    if "CartesianProduct" in plan:
-        raise AssertionError("plan contains a CartesianProduct")

@@ -2,8 +2,8 @@
 """Per-query measurement harness.
 
 For each requested query key: one untimed warm pass (codegen), then N timed
-noop-sink passes (same protocol as bench.py extensions), plus the
-``explain("formatted")`` plan captured to ``plans/measure/<key>_<tag>.txt``.
+noop-sink passes (same protocol as bench.py extensions), plus the key's
+plan signature (``plans.signature``).
 
 Usage:
     python scripts/measure.py --keys set_jaccard,pagerank --tag before
@@ -11,7 +11,8 @@ Usage:
     python scripts/measure.py --keys ... --runs 3
 
 Prints one JSON line: {"timings": {key: best_sec}, "cold": {...},
-"compiles": {key: n}, "joins": {key: {operator: n}}, "tag": ...}.
+"compiles": {key: n}, "joins": {key: {operator: n}},
+"signatures": {key: {operator: n}}, "tag": ...}.
 ``compiles`` counts the classes Spark's code generator compiled during a
 key's timed passes (``CodegenMetrics``): above 0, the key's generated code
 does not stay in the codegen cache between passes and each pass pays
@@ -19,8 +20,10 @@ Janino and the JIT again. ``joins`` counts the join operators
 (BroadcastHashJoin, SortMergeJoin, ...) in the final, post-AQE plans of
 the key's timed passes (``plans.executed_joins``): the strategy that ran,
 not the one the static plan chose. A cached relation's plan is counted in
-every execution that scans it.
-Plans and timings are measurement artifacts only — nothing here is on any
+every execution that scans it. ``signatures`` are the static plans at this
+scale factor; the ledger ``plans/signatures.json`` holds them at the test
+scale factor (``python tests/test_query_plans_audit.py`` rewrites it).
+Timings are measurement artifacts only — nothing here is on any
 query path, and nothing caches across runs (same clear_cached_state rule
 as bench.py).
 """
@@ -37,7 +40,6 @@ from collections import Counter
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
@@ -46,7 +48,6 @@ def main() -> None:
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--runs", type=int, default=2)
-    ap.add_argument("--no-plans", action="store_true")
     ap.add_argument(
         "--gc",
         action="store_true",
@@ -70,9 +71,6 @@ def main() -> None:
     unknown = [k for k in keys if k not in queries]
     if unknown:
         raise SystemExit(f"unknown keys: {unknown}")
-
-    plans_dir = os.path.join(REPO, "plans", "measure")
-    os.makedirs(plans_dir, exist_ok=True)
 
     compilations = spark.sparkContext._jvm.org.apache.spark.metrics.source \
         .CodegenMetrics.METRIC_COMPILATION_TIME()
@@ -99,16 +97,12 @@ def main() -> None:
     cold: dict[str, float] = {}
     compiles: dict[str, int] = {}
     joins: dict[str, dict[str, int]] = {}
+    signatures: dict[str, dict[str, int]] = {}
     for key in keys:
         fn = queries[key]
         spark.sparkContext.setJobDescription(f"measure:{key}")
         df = fn(spark, SF_DIR)
-        if not args.no_plans:
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            with open(os.path.join(plans_dir, f"{key}_{args.tag}.txt"), "w") as fh:
-                fh.write(plan)
+        signatures[key] = dict(sorted(plans.signature(df).items()))
         t0 = time.monotonic()
         df.write.format("noop").mode("overwrite").save()
         cold[key] = round(time.monotonic() - t0, 3)
@@ -144,6 +138,7 @@ def main() -> None:
         "cold": cold,
         "compiles": compiles,
         "joins": joins,
+        "signatures": signatures,
     }))
 
 

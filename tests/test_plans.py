@@ -46,16 +46,52 @@ def test_dim_join_broadcasts(spark):
         on="c_nationkey",
         broadcast=True,
     )(customer)
-    plans.assert_broadcast_join(df)
-    plans.assert_no_cartesian(df)
+    sig = plans.signature(df)
+    assert sig["BroadcastHashJoin"] and not sig["CartesianProduct"], sig
 
 
 def test_group_agg_is_partial_final(spark, lineitem):
     df = ops.group_agg("l_returnflag", {"l_quantity": "sum"})(lineitem)
-    plan = plans.physical_plan(df)
     # partial (map-side) + final aggregate around one exchange
-    assert plan.count("HashAggregate") >= 2
-    assert plans.summarize(df).exchanges >= 1
+    sig = plans.signature(df)
+    assert sig["HashAggregate"] == 2 and sig["Exchange"] == 1, sig
+
+
+def test_summary_counts_each_exchange_once(spark):
+    # the formatted plan prints every node twice: in the tree and in the
+    # details below it
+    df = spark.range(100).selectExpr("id % 3 AS g").groupBy("g").count()
+    assert plans.summarize(df).exchanges == 1
+
+
+def test_signature_on_small_frames(spark, lineitem):
+    from pyspark.sql import Window
+
+    df = spark.range(10).selectExpr("id", "id % 3 AS g")
+    # a cached relation that already ran lists its final adaptive plan,
+    # query stages included: the stage wrappers are not operators
+    cached = df.groupBy("g").count().cache()
+    cached.count()
+    joined = cached.join(df, "g")
+    assert "ShuffleQueryStage" in plans.physical_plan(joined)
+    sig = plans.signature(joined)
+    assert not [op for op in sig if op.endswith("QueryStage")], sig
+    # each node counts once, though the plan text names it twice
+    assert sig["BroadcastHashJoin"] == 1 and sig["InMemoryRelation"] == 1, sig
+    cached.unpersist()
+    # a window with no partition spec is the single-partition funnel
+    w_global = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
+    w_part = Window.partitionBy("g").orderBy("id").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    assert plans.signature(df.withColumn("c", F.sum("id").over(w_global)))[
+        "global_windows"] == 1
+    assert plans.signature(df.withColumn("c", F.sum("id").over(w_part)))[
+        "global_windows"] == 0
+    # a scan counts once its PushedFilters list is non-empty
+    assert plans.signature(lineitem)["pushed_filter_scans"] == 0
+    filtered = lineitem.filter("l_quantity < 10")
+    assert plans.signature(filtered)["pushed_filter_scans"] == 1
 
 
 def test_orderby_limit_is_top_k(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from mini_etl_spark import plans
 from mini_etl_spark.functions.privacy import k_anonymize, k_anonymity_report
 
 ROWS = [
@@ -75,13 +76,8 @@ def test_invalid_args(spark):
 
 
 def test_broadcast_join_shape(spark):
-    plan = (
-        k_anonymize(_df(spark), QI, k=2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan  # under-k list must broadcast
+    # the under-k list must broadcast
+    assert plans.signature(k_anonymize(_df(spark), QI, k=2))["BroadcastHashJoin"]
 
 
 def test_l_diversity_report(spark):

@@ -1,10 +1,18 @@
 """Fleet-wide plan audit: every declared query's physical plan must be free
 of accidental scale hazards — no CartesianProduct anywhere, and nested-loop
 joins only where a theta-join is the documented intent (cosine_pairs, the
-exact pair-join baseline whose scale path is LSH bucketing)."""
+exact pair-join baseline whose scale path is LSH bucketing) — and must
+keep the plan signature (``plans.signature``) its key has in the ledger
+``plans/signatures.json``, so a plan that gains or loses an operator
+fails here with the operators that moved.
+
+After an intended plan change, rewrite the ledger and review its diff:
+    python tests/test_query_plans_audit.py
+"""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -17,6 +25,8 @@ import __spark_entry__ as entrymod  # noqa: E402
 from mini_etl_spark import plans  # noqa: E402
 
 from tests.conftest import SF_SMALL  # noqa: E402
+
+LEDGER = os.path.join(os.path.dirname(entrymod.__file__), "plans", "signatures.json")
 
 INTENTIONAL_THETA_JOINS = {"cosine_pairs"}
 
@@ -50,39 +60,45 @@ GLOBAL_WINDOW_OK = {
     "temperature_mix",
 }
 
-_GLOBAL_WINDOW_RE = None
+
+def _signature(spark, key):
+    # operators leave frames cached, and a cached frame replaces the
+    # matching subplan of every later query
+    spark.catalog.clearCache()
+    return plans.signature(entrymod.queries()[key](spark, SF_SMALL))
 
 
-def _has_global_window(plan: str) -> bool:
-    """True when a windowspecdefinition has an EMPTY partition clause —
-    the single-partition funnel shape. In the physical plan partition
-    columns print before the first `col ASC/DESC NULLS ...` order entry,
-    so a spec whose first element is already an order entry is global."""
-    import re
-
-    global _GLOBAL_WINDOW_RE
-    if _GLOBAL_WINDOW_RE is None:
-        _GLOBAL_WINDOW_RE = re.compile(
-            r"windowspecdefinition\([^(),]+ (?:ASC|DESC) NULLS"
-        )
-    return bool(_GLOBAL_WINDOW_RE.search(plan))
+@pytest.fixture(scope="module")
+def ledger():
+    with open(LEDGER) as fh:
+        return json.load(fh)
 
 
 @pytest.mark.parametrize("key", sorted(entrymod.queries().keys()))
-def test_no_scale_hazards_in_plan(spark, key):
-    df = entrymod.queries()[key](spark, SF_SMALL)
-    plan = plans.physical_plan(df)
-    assert "CartesianProduct" not in plan, f"{key}: cartesian product in plan"
+def test_no_scale_hazards_in_plan(spark, ledger, key):
+    sig = _signature(spark, key)
+    assert not sig["CartesianProduct"], f"{key}: cartesian product in plan"
     if key not in INTENTIONAL_THETA_JOINS | SCALAR_BROADCAST_JOINS:
-        assert "BroadcastNestedLoopJoin" not in plan, (
+        assert not sig["BroadcastNestedLoopJoin"], (
             f"{key}: unexpected nested-loop join"
         )
     if key not in GLOBAL_WINDOW_OK:
-        assert not _has_global_window(plan), (
+        assert not sig["global_windows"], (
             f"{key}: window with no partition spec (single-partition "
             "funnel) — repartition-safe forms exist for every global "
             "cumsum/rank in this codebase"
         )
+    want = ledger.get(key, {})
+    diff = {
+        op: (want.get(op, 0), sig[op])
+        for op in sorted(set(want) | set(sig))
+        if want.get(op, 0) != sig[op]
+    }
+    assert not diff, (
+        f"{key}: plan signature differs from plans/signatures.json, "
+        f"{{operator: (ledger, now)}}: {diff}. If the new plan is "
+        "intended, rewrite the ledger: `python tests/test_query_plans_audit.py`"
+    )
 
 
 def test_codegen_present_in_simple_agg(spark):
@@ -90,18 +106,13 @@ def test_codegen_present_in_simple_agg(spark):
     assert plans.executed_codegen_stages(df) >= 2  # partial + final agg stages
 
 
-def test_global_window_detector_not_vacuous(spark):
-    """The audit's global-window regex must actually fire on a known
-    single-partition window plan, and stay quiet on a partitioned one."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+if __name__ == "__main__":
+    from mini_etl_spark.session import get_spark
 
-    df = spark.range(10).selectExpr("id", "id % 3 AS g")
-    w_global = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
-    w_part = Window.partitionBy("g").orderBy("id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    p_global = plans.physical_plan(df.withColumn("c", F.sum("id").over(w_global)))
-    p_part = plans.physical_plan(df.withColumn("c", F.sum("id").over(w_part)))
-    assert _has_global_window(p_global)
-    assert not _has_global_window(p_part)
+    session = get_spark("plan-signatures", shuffle_partitions=8)  # as conftest
+    lines = [
+        f"{json.dumps(key)}: {json.dumps(_signature(session, key), sort_keys=True)}"
+        for key in sorted(entrymod.queries())
+    ]
+    with open(LEDGER, "w") as fh:
+        fh.write("{\n" + ",\n".join(lines) + "\n}\n")

@@ -125,3 +125,15 @@ def test_local_session_checkpoints_through_filesystem_manager(spark):
     finally:
         spark.conf.set(_MANAGER_KEY,
                        _SQL_STREAMING + "FileSystemBasedCheckpointFileManager")
+
+
+def test_estimated_bytes_reads_the_unknown_size_sentinel_as_none(spark):
+    from mini_etl_spark.session import estimated_bytes
+
+    unknown = spark.createDataFrame([(i, 1.5 * i) for i in range(1000)],
+                                    "g long, v double")
+    assert estimated_bytes(unknown) is None
+    # a plan over an unknown leaf stays unknown (a join multiplies it)
+    assert estimated_bytes(unknown.join(unknown, "g")) is None
+    known = estimated_bytes(spark.range(1000))
+    assert known is not None and 0 < known < 1024**2
